@@ -84,10 +84,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 _SCRATCH_REGISTERED: set[str] = set()
 _SCRATCH_SWEPT: list[bool] = []
 
