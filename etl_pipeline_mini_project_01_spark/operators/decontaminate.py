@@ -57,24 +57,6 @@ def _ngram_hashes(df: DataFrame, n: int, id_col: str,
         .distinct())
 
 
-def _ngram_texts(df: DataFrame, n: int, id_col: str,
-                 text_col: str) -> DataFrame:
-    """(id_col, gram): distinct word n-gram STRINGS - the pre-hash
-    form, kept for audits/tests that need the gram text itself (since
-    r15 no production path shuffles it: the arrow Bloom path moved to
-    the 16-byte double-hash pair, see _gram_hash_pairs)."""
-    toks = df.select(id_col, word_array(text_col).alias("_w"))
-    idx = F.when(F.size("_w") >= n,
-                 F.sequence(F.lit(1), F.size("_w") - (n - 1))
-                 ).otherwise(F.array().cast("array<int>"))
-    return (toks.select(
-        id_col,
-        F.explode(F.transform(
-            idx, lambda i: F.array_join(F.slice("_w", i, n), " ")
-        )).alias("gram"))
-        .distinct())
-
-
 def _gram_hash_pairs(df: DataFrame, n: int, id_col: str,
                      text_col: str) -> DataFrame:
     """(id_col, gram_hash, h2): distinct double-hash pairs of each word
