@@ -57,23 +57,6 @@ def _interleave(cells: Sequence[Column], b: int) -> Column:
     return z
 
 
-def zorder_value(cols: Sequence[str],
-                 bits: int | None = None) -> Column:
-    """Morton code column over `cols` (2-6 numeric/date/timestamp
-    columns): each column min/max-scales to a `bits`-bit integer grid
-    cell (one broadcast agg supplies the bounds), then the cells' bits
-    interleave LSB-first. NULL in any column maps to cell 0 (nulls
-    cluster together at the low end - they match no range predicate,
-    so their placement only affects neighbors' tightness).
-
-    The expression references `__zmin_<c>`/`__zmax_<c>` bound columns;
-    use :func:`with_zorder` to attach them (kept separate so callers
-    composing several z-expressions reuse one bounds join)."""
-    k = len(cols)
-    b = _check_shape(k, bits)
-    return _interleave([_minmax_cell(c, b) for c in cols], b)
-
-
 def _minmax_cell(c: str, b: int) -> Column:
     """Linear min/max grid cell for one numeric column, referencing its
     `__zmin_<c>`/`__zmax_<c>` broadcast bound columns."""
