@@ -47,13 +47,3 @@ def salted_sum_count(df: DataFrame, key: str, value_col: str,
              F.sum("__s").cast("double").alias("total"))
         .withColumn("avg_value", F.col("total") / F.col("n"))
     )
-
-
-def explode_salt(small: DataFrame, salt_buckets: int = 8) -> DataFrame:
-    """Join-side salting: replicate the small side once per salt bucket so
-    a salted big side still matches (`big.__salt == small.__salt`). Use
-    when AQE skew-join can't help (e.g. the skew is in a grouping that
-    feeds the join)."""
-    return small.withColumn(
-        "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).cast("long"))
