@@ -47,8 +47,3 @@ def calendar_attrs(ts: str | Column) -> dict[str, Column]:
         "day_name": F.date_format(c, "EEEE"),
         "is_weekend": is_weekend(c),
     }
-
-
-def epoch_seconds_between(later: Column, earlier: Column) -> Column:
-    """F11: EXTRACT(EPOCH FROM (a - b)) (silver_etl.py:156-160)."""
-    return F.unix_timestamp(later) - F.unix_timestamp(earlier)
