@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..sources import fsio
+from .foldmath import norm2, row_dots, sq_dists
 from .kmeans import _assign, _scaled
 
 #: The layout's FILE MANIFEST lives under this subdirectory as a
@@ -377,7 +378,6 @@ def manifest_clusters(path: str, version: int | None = None
 def write_ivf_layout(emb: DataFrame, cents: list[list[float]], dim: int,
                      path: str, id_col: str = "vec_id",
                      vec_col: str = "embedding",
-                     kernel: str | None = None,
                      mode: str = "overwrite",
                      files_per_cluster: int = 1,
                      stats_columns: list[str] | None = None,
@@ -422,7 +422,7 @@ def write_ivf_layout(emb: DataFrame, cents: list[list[float]], dim: int,
     # of emb's own columns, so every payload column rides the same
     # map-side pass into the layout - same output contract as the old
     # join-based build, minus the join.
-    assigned = (_assign(_scaled(emb, vec_col), cents, dim, kernel)
+    assigned = (_assign(_scaled(emb, vec_col), cents, dim)
                 .drop("xi", "xd", "centroid_dist"))
     routed = route_by_cluster(assigned, id_col, files_per_cluster,
                               split=split, num_clusters=len(cents))
@@ -434,7 +434,6 @@ def write_ivf_layout(emb: DataFrame, cents: list[list[float]], dim: int,
 def append_to_ivf_layout(delta: DataFrame, cents: list[list[float]],
                          dim: int, path: str, id_col: str = "vec_id",
                          vec_col: str = "embedding",
-                         kernel: str | None = None,
                          stats_columns: list[str] | None = None) -> None:
     """Daily-ingest seam: assign a DELTA batch under the FROZEN model
     (the E41 shape - one map-side pass, |delta|-sized, no refit) and
@@ -466,7 +465,7 @@ def append_to_ivf_layout(delta: DataFrame, cents: list[list[float]],
     # between the jobs) could write rows into a cluster absent from
     # `touched`, whose files the incremental manifest commit would
     # then never list. |delta|-sized, the same pin the probe tails use.
-    assigned = (_assign(_scaled(delta, vec_col), cents, dim, kernel)
+    assigned = (_assign(_scaled(delta, vec_col), cents, dim)
                 .drop("xi", "xd", "centroid_dist")
                 .localCheckpoint())
     touched = [int(r["cluster"]) for r in
@@ -489,7 +488,6 @@ def write_ivf_layout_generation(emb: DataFrame, cents: list[list[float]],
                                 dim: int, path: str,
                                 id_col: str = "vec_id",
                                 vec_col: str = "embedding",
-                                kernel: str | None = None,
                                 files_per_cluster: int = 1,
                                 max_retries: int = 5,
                                 stats_columns: list[str] | None = None,
@@ -535,7 +533,7 @@ def write_ivf_layout_generation(emb: DataFrame, cents: list[list[float]],
     gen = f"gen={_uuid.uuid4().hex[:12]}"
     stage = os.path.join(path, gen)
     if assigned is None:
-        assigned = (_assign(_scaled(emb, vec_col), cents, dim, kernel)
+        assigned = (_assign(_scaled(emb, vec_col), cents, dim)
                     .drop("xi", "xd", "centroid_dist"))
     routed = route_by_cluster(assigned, id_col, files_per_cluster,
                               split=split, num_clusters=len(cents))
@@ -814,18 +812,14 @@ def vacuum_layout_generations(path: str, keep_last: int = 2,
 def probe_clusters(query_vec: list[float], cents: list[list[float]],
                    nprobe: int) -> list[int]:
     """Driver-side probe list for ONE query vector: the nprobe nearest
-    centroids by the same fold-order squared-euclidean arithmetic as
-    kmeans_transform_topn's vectorized kernel (per-dim accumulation,
-    stable argsort, ties -> lowest cid). k x dim control-plane math -
-    the serving path never touches an executor to pick its probes."""
-    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
+    centroids by the same foldmath.sq_dists arithmetic as
+    kmeans_transform_topn's kernel (stable argsort, ties -> lowest
+    cid). k x dim control-plane math - the serving path never touches
+    an executor to pick its probes."""
+    q = np.asarray([[float(v) for v in query_vec]], dtype=np.float64)
     cmat = np.asarray([[float(v) for v in c] for c in cents],
                       dtype=np.float64)
-    acc = np.zeros(cmat.shape[0], dtype=np.float64)
-    for i in range(q.shape[0]):              # fold order: dims ascending
-        d = q[i] - cmat[:, i]
-        acc = acc + d * d
-    order = np.argsort(acc, kind="stable")
+    order = np.argsort(sq_dists(q, cmat)[0], kind="stable")
     return [int(c) for c in order[:nprobe]]
 
 
@@ -834,22 +828,17 @@ def _cosine_to_literal(q: np.ndarray):
     Arrow kernel per batch (r14 - the HOF fold expressions this
     replaces are CodegenFallback, interpreted per element on every
     probed row). Arithmetic is the bit-exact twin of the previous
-    expression form: the dot and the norm both accumulate per dim in
-    fold order from 0.0, each product/widening is a single
-    correctly-rounded IEEE op, and the final divide-by-sqrt matches
-    (the engine-wide bit-exactness contract; qn keeps its original
-    numpy normalization - it is part of the pinned values)."""
-    qn = q / np.sqrt(float((q * q).sum()))
+    expression form: the dot and the norm are foldmath.row_dots /
+    norm2, each product/widening is a single correctly-rounded IEEE
+    op, and the final divide-by-sqrt matches (the engine-wide
+    bit-exactness contract; qn keeps its original numpy normalization -
+    it is part of the pinned values)."""
+    qn = (q / np.sqrt(float((q * q).sum())))[None, :]
 
     @pandas_udf("double")
     def cos_lit(rv: pd.Series) -> pd.Series:
         x = np.stack(rv.to_numpy()).astype(np.float64)
-        dot = np.zeros(x.shape[0], dtype=np.float64)
-        n2 = np.zeros(x.shape[0], dtype=np.float64)
-        for i in range(x.shape[1]):          # fold order: dims ascending
-            dot = dot + x[:, i] * qn[i]
-            n2 = n2 + x[:, i] * x[:, i]
-        return pd.Series(dot / np.sqrt(n2))
+        return pd.Series(row_dots(x, qn) / np.sqrt(norm2(x)))
 
     return cos_lit(F.col("embedding"))
 
@@ -870,7 +859,6 @@ def ivf_probe_pruned_batch(spark: SparkSession, path: str,
                            nprobe: int, k: int,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding",
-                           kernel: str | None = None,
                            probe_lists: str = "auto",
                            literal_max: int = LITERAL_PROBE_MAX,
                            index_version: int | None = None
@@ -933,11 +921,10 @@ def ivf_probe_pruned_batch(spark: SparkSession, path: str,
             StructField("cluster", IntegerType())]))
     else:
         cand = (kmeans_transform_topn(queries, cents, dim, n=nprobe,
-                                      id_col=id_col, vec_col=vec_col,
-                                      kernel=kernel)
+                                      id_col=id_col, vec_col=vec_col)
                 .select(F.col(id_col).alias("query_id"), "cluster"))
     return _ranked_candidate_scan(spark, path, cand, literal_probes,
-                                  queries, k, id_col, vec_col, kernel,
+                                  queries, k, id_col, vec_col,
                                   version=index_version)
 
 
@@ -989,7 +976,6 @@ def _ranked_candidate_scan(spark: SparkSession, path: str,
                            literal_probes: list[int] | None,
                            queries: DataFrame, k: int,
                            id_col: str, vec_col: str,
-                           kernel: str | None,
                            version: int | None = None) -> DataFrame:
     """Shared probe tail (flat and two-level probes differ ONLY in how
     the (query_id, cluster) candidate relation is produced): one layout
@@ -1014,8 +1000,7 @@ def _ranked_candidate_scan(spark: SparkSession, path: str,
       batches at runtime."""
     from pyspark.sql import Window
 
-    from .semdedup import (DEFAULT_KERNEL, norm_dot, normalized_vectors,
-                           pair_dot)
+    from .semdedup import norm_dot, normalized_vectors
 
     qv = (normalized_vectors(queries, id_col, vec_col)
           .select(F.col(id_col).alias("query_id"),
@@ -1047,25 +1032,12 @@ def _ranked_candidate_scan(spark: SparkSession, path: str,
         cand_side, qv_side = cand, qv
     base = (lay.join(cand_side, "cluster")
             .filter(F.col(id_col) != F.col("query_id")))
-    if (kernel or DEFAULT_KERNEL) == "fold":
-        # the expression-spec twin the parity tests flip to
-        probed = (base
-                  .withColumn("_n2", F.aggregate(
-                      vec_col, F.lit(0.0),
-                      lambda a, v: a + v.cast("double")
-                      * v.cast("double")))
-                  .withColumn("nv", F.transform(
-                      vec_col,
-                      lambda x: x.cast("double") / F.sqrt("_n2")))
-                  .join(qv_side, "query_id")
-                  .withColumn("cosine", pair_dot("qnv", "nv", kernel)))
-    else:
-        # norm_dot fuses probed-row normalization + dot into one Arrow
-        # kernel (r14): the HOF chain evaluated interpreted per element
-        # (~0.35 ms/row) on the candidate-sized relation - the probe
-        # tail's measured wall. Bit-equality with the fold shape pinned.
-        probed = (base.join(qv_side, "query_id")
-                  .withColumn("cosine", norm_dot(vec_col, "qnv")))
+    # norm_dot fuses probed-row normalization + dot into one Arrow
+    # kernel (r14): the HOF chain evaluated interpreted per element
+    # (~0.35 ms/row) on the candidate-sized relation - the probe tail's
+    # measured wall.
+    probed = (base.join(qv_side, "query_id")
+              .withColumn("cosine", norm_dot(vec_col, "qnv")))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), id_col)
     return (probed.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
@@ -1123,7 +1095,6 @@ def write_ivf_layout_twolevel(emb: DataFrame,
                               k2: int, dim: int, path: str,
                               id_col: str = "vec_id",
                               vec_col: str = "embedding",
-                              kernel: str | None = None,
                               mode: str = "overwrite",
                               files_per_cluster: int = 1,
                               stats_columns: list[str] | None = None,
@@ -1164,12 +1135,10 @@ def write_ivf_layout_twolevel(emb: DataFrame,
     if coarse_assigned is not None:
         assigned = coarse_assigned
     else:
-        assigned = (_assign(_scaled(emb, vec_col), coarse_cents, dim,
-                            kernel)
+        assigned = (_assign(_scaled(emb, vec_col), coarse_cents, dim)
                     .withColumnRenamed("cluster", "coarse")
                     .drop("centroid_dist"))
-    fined = _assign_fine(assigned, fine, dim, kernel,
-                         coarse_cents=coarse_cents)
+    fined = _assign_fine(assigned, fine, dim, coarse_cents=coarse_cents)
     routed = (fined
               .withColumn("cluster",
                           F.col("coarse") * k2 + F.col("fine"))
@@ -1186,22 +1155,18 @@ def probe_clusters_twolevel(query_vec: list[float],
                             k2: int, nprobe: int,
                             nprobe_coarse: int) -> list[int]:
     """Driver-side probe list for ONE query under a two-level model:
-    the `nprobe_coarse` nearest coarse cells by the same fold-order
-    squared-euclidean arithmetic as `probe_clusters`, then the `nprobe`
+    the `nprobe_coarse` nearest coarse cells by the same
+    foldmath.sq_dists arithmetic as `probe_clusters`, then the `nprobe`
     nearest FINE centroids across those cells' lists (a fit-time-empty
     coarse cell contributes its own centroid as a fine=0 leaf, matching
     the build's fallback). Cost is (k1 + nprobe_coarse*k2)*dim numpy -
     control-plane; the flat probe's k*dim scan is exactly what this
     avoids at corpus-scaled k. Ties -> lowest leaf id (stable argsort
     over leaves visited in ascending (coarse, fine) order)."""
-    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
+    q = np.asarray([[float(v) for v in query_vec]], dtype=np.float64)
 
     def _fold_dists(cmat: np.ndarray) -> np.ndarray:
-        acc = np.zeros(cmat.shape[0], dtype=np.float64)
-        for i in range(q.shape[0]):          # fold order: dims ascending
-            d = q[i] - cmat[:, i]
-            acc = acc + d * d
-        return acc
+        return sq_dists(q, cmat)[0]
 
     cmat = np.asarray([[float(v) for v in c] for c in coarse_cents],
                       dtype=np.float64)
@@ -1232,7 +1197,6 @@ def ivf_probe_pruned_batch_twolevel(spark: SparkSession, path: str,
                                     nprobe_coarse: int = 4,
                                     id_col: str = "vec_id",
                                     vec_col: str = "embedding",
-                                    kernel: str | None = None,
                                     probe_lists: str = "auto",
                                     literal_max: int = LITERAL_PROBE_MAX,
                                     index_version: int | None = None
@@ -1287,5 +1251,5 @@ def ivf_probe_pruned_batch_twolevel(spark: SparkSession, path: str,
             .select(F.col(id_col).alias("query_id"),
                     F.col("cluster").cast("int").alias("cluster")))
     return _ranked_candidate_scan(spark, path, cand, literal_probes,
-                                  queries, k, id_col, vec_col, kernel,
+                                  queries, k, id_col, vec_col,
                                   version=index_version)

@@ -23,24 +23,13 @@ partial sums):
     IEEE division of exactly-representable integers - bit-identical in
     Python, Spark, and DuckDB while |s| < 2^53 (see SCALE note on the
     module constant below);
-  * distances accumulate over dims in fixed index order from a 0.0
-    accumulator; argmin ties break on the lowest centroid id. Two
-    kernels implement the identical operation sequence:
-      - 'vectorized' (default): an Arrow-batched pandas_udf doing
-        per-dim numpy column ops - vectorized ACROSS rows, sequential
-        ACROSS dims, so every row's float64 rounding sequence is
-        exactly the fold's (IEEE ops are deterministic; only order
-        matters, and the order is pinned);
-      - 'fold': the pure-SQL F.aggregate higher-order fold, mirrored
-        1:1 by the oracle's list_reduce(list_prepend(0.0, ...)).
-    tests/test_kmeans.py asserts the two kernels agree bit-for-bit;
-    the fold is the auditable spec, the pandas_udf is the 100 TB path
-    (interpreted HOF lambdas never reach whole-stage codegen - per-row
-    cost is k x dim expression-tree walks, ~100x the Arrow batch).
-    A third kernel, 'matmul', exists for the LARGE-k operating point
-    (SemDeDup's cluster-size-constant rule): one dgemm per batch with
-    an exact winner-distance recompute - see _assign_matmul for why it
-    is ~30x faster at k=800 yet not the oracle default.
+  * distances are the fold-order squared euclidean distances of
+    operators/foldmath.py (dims ascending from a 0.0 accumulator - the
+    sequence the oracle replays with list_reduce(list_prepend(0.0,
+    ...))); argmin ties break on the lowest centroid id. One kernel
+    computes them: an Arrow-batched pandas_udf that vectorizes the fold
+    ACROSS rows and keeps it sequential ACROSS dims, so every row's
+    float64 rounding sequence is the oracle's.
 
 Deterministic seeding: the k initial centroids are the rows with the k
 smallest md5('seed|' || id) digests (ties -> lowest id), numbered
@@ -58,6 +47,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .foldmath import sq_dists
+
 #: 2^20: multiplying a double by it only shifts the exponent (exact).
 #: BIGINT component sums are exact up to ~2^43 rows per cluster; the
 #: stricter ORACLE-parity bound is |sum| < 2^53 (~2^33 rows at unit-scale
@@ -67,10 +58,6 @@ from pyspark.sql.functions import pandas_udf
 #: rounded division; beyond it the engine is still exact but the oracle
 #: would drift, so driver-checked fixtures must stay under that bound.
 SCALE = 1 << 20
-
-#: Default assignment kernel; tests flip this to cross-check bit-equality.
-DEFAULT_KERNEL = "vectorized"
-
 
 def _scaled(emb: DataFrame, vec_col: str) -> DataFrame:
     """Adds xi (bigint-scaled components) and xd (their exact double
@@ -89,129 +76,29 @@ def _seed_key(id_col: str):
     return F.md5(F.concat(F.lit("seed|"), F.col(id_col).cast("string")))
 
 
-def _dist(cent: list[float], dim: int):
-    """Squared euclidean distance of xd to a literal centroid, folded in
-    dim order from 0.0. xd is a materialized COLUMN (not a rebuilt
-    expression), so element access inside the lambda is O(1)."""
-    arr = F.array(*[F.lit(float(v)) for v in cent])
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(dim)), F.lit(0.0),
-        lambda a, i: a + (F.element_at("xd", i) - F.element_at(arr, i))
-                       * (F.element_at("xd", i) - F.element_at(arr, i)))
-
-
-def _assign_fold(df: DataFrame, cents: list[list[float]],
-                 dim: int) -> DataFrame:
-    """Fold-kernel assignment: argmin centroid (ties -> lowest id) +
-    winning squared distance, as interpreted HOF expressions."""
-    dists = F.array(*[_dist(c, dim) for c in cents])
-    return (df.withColumn("_d", dists)
-            .withColumn("cluster",
-                        (F.array_position("_d", F.array_min("_d")) - 1)
-                        .cast("bigint"))
-            .withColumn("centroid_dist", F.array_min("_d"))
-            .drop("_d"))
-
-
-def _assign_vectorized(df: DataFrame, cents: list[list[float]],
-                       dim: int) -> DataFrame:
-    """Arrow-batched assignment kernel: one pandas_udf call per batch,
-    k x dim numpy COLUMN operations instead of per-row interpreted
-    expression trees (~100x per row; the SCALE.md hot-kernel fix).
-
-    Bit-exact with _assign_fold by construction: for each centroid the
-    accumulator starts at 0.0 and adds (xd[i]-c[i])^2 in dim index
-    order - numpy elementwise float64 ops are the same correctly-rounded
-    IEEE ops the fold performs, just batched across rows - and
-    np.argmin's first-minimum matches array_position(array_min)'s
-    lowest-index tie-break.
-    """
-    cmat = np.array([[float(v) for v in c] for c in cents],
-                    dtype=np.float64)
-
-    @pandas_udf("cluster bigint, centroid_dist double")
-    def assign(xd: pd.Series) -> pd.DataFrame:
-        mat = np.stack(xd.to_numpy())            # n x dim float64
-        n = mat.shape[0]
-        dmat = np.empty((n, cmat.shape[0]), dtype=np.float64)
-        for j in range(cmat.shape[0]):
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(dim):                 # fold order: dims ascending
-                d = mat[:, i] - cmat[j, i]
-                acc = acc + d * d
-            dmat[:, j] = acc
-        cluster = np.argmin(dmat, axis=1)        # first min == lowest cid
-        return pd.DataFrame({
-            "cluster": cluster.astype(np.int64),
-            "centroid_dist": dmat[np.arange(n), cluster]})
-
-    return (df.withColumn("_a", assign("xd"))
-            .withColumn("cluster", F.col("_a.cluster"))
-            .withColumn("centroid_dist", F.col("_a.centroid_dist"))
-            .drop("_a"))
-
-
-def _assign_matmul(df: DataFrame, cents: list[list[float]],
-                   dim: int) -> DataFrame:
-    """BLAS assignment kernel for LARGE k - the 100 TB operating point
-    where SemDeDup's cluster-size-constant rule makes k grow with the
-    corpus and assignment cost is O(n*k*dim) by definition.
-
-    Why it exists (measured, 100x scale curve): the bit-exact
-    `vectorized` kernel issues k*dim separate numpy column ops per Arrow
-    batch to pin the fold's summation order - at k=800 that is ~51k
-    interpreter-dispatched array ops per batch and the assignment pass
-    dominated SemDeDup 402 s of 446 s. This kernel computes all k
-    distances with ONE dgemm per batch (||x||^2 - 2 x.C^T + ||c||^2),
-    takes the argmin, then recomputes the WINNER's distance exactly in
-    fold order (dim column ops, not k*dim) - so `centroid_dist` is
-    bit-identical to the fold kernel whenever the argmin agrees.
-
-    The caveat that keeps it non-default: the expanded-form distances
-    round differently than the fold, so an argmin razor-tie (two
-    centroids within ~1 ulp of each other) can resolve differently -
-    fine for clustering/SemDeDup at scale, not for hash-exact oracle
-    replay. tests/test_kmeans.py pins full equality vs `vectorized` on
-    the fixtures (no such ties there)."""
-    cmat = np.array([[float(v) for v in c] for c in cents],
-                    dtype=np.float64)
-    cnorm = (cmat * cmat).sum(axis=1)
-
-    @pandas_udf("cluster bigint, centroid_dist double")
-    def assign(xd: pd.Series) -> pd.DataFrame:
-        mat = np.stack(xd.to_numpy())            # n x dim float64
-        n = mat.shape[0]
-        xnorm = (mat * mat).sum(axis=1)
-        dmat = xnorm[:, None] - 2.0 * (mat @ cmat.T) + cnorm[None, :]
-        cluster = np.argmin(dmat, axis=1)        # first min == lowest cid
-        win = cmat[cluster]                      # n x dim
-        acc = np.zeros(n, dtype=np.float64)
-        for i in range(dim):                     # fold order, winner only
-            d = mat[:, i] - win[:, i]
-            acc = acc + d * d
-        return pd.DataFrame({
-            "cluster": cluster.astype(np.int64),
-            "centroid_dist": acc})
-
-    return (df.withColumn("_a", assign("xd"))
-            .withColumn("cluster", F.col("_a.cluster"))
-            .withColumn("centroid_dist", F.col("_a.centroid_dist"))
-            .drop("_a"))
-
-
-def _assign(df: DataFrame, cents: list[list[float]], dim: int,
-            kernel: str | None = None) -> DataFrame:
+def _assign(df: DataFrame, cents: list[list[float]],
+            dim: int) -> DataFrame:
     """Adds `cluster` (argmin centroid, ties -> lowest id) and
-    `centroid_dist` (the winning squared distance) to a _scaled frame,
-    via the chosen kernel (module DEFAULT_KERNEL when None)."""
-    kernel = kernel or DEFAULT_KERNEL
-    if kernel == "vectorized":
-        return _assign_vectorized(df, cents, dim)
-    if kernel == "matmul":
-        return _assign_matmul(df, cents, dim)
-    if kernel == "fold":
-        return _assign_fold(df, cents, dim)
-    raise ValueError(f"unknown kernel: {kernel}")
+    `centroid_dist` (the winning squared distance) to a _scaled frame:
+    one Arrow-batched pandas_udf call per batch scoring all k literal
+    centroids with foldmath.sq_dists (np.argmin's first minimum is the
+    lowest-id tie-break)."""
+    cmat = np.array([[float(v) for v in c] for c in cents],
+                    dtype=np.float64)
+
+    @pandas_udf("cluster bigint, centroid_dist double")
+    def assign(xd: pd.Series) -> pd.DataFrame:
+        mat = np.stack(xd.to_numpy())            # n x dim float64
+        dmat = sq_dists(mat, cmat)
+        cluster = np.argmin(dmat, axis=1)        # first min == lowest cid
+        return pd.DataFrame({
+            "cluster": cluster.astype(np.int64),
+            "centroid_dist": dmat[np.arange(mat.shape[0]), cluster]})
+
+    return (df.withColumn("_a", assign("xd"))
+            .withColumn("cluster", F.col("_a.cluster"))
+            .withColumn("centroid_dist", F.col("_a.centroid_dist"))
+            .drop("_a"))
 
 
 def _scale_list(vs) -> list[float]:
@@ -237,14 +124,13 @@ def _iter_partial_sums(vecs: DataFrame, cents: list[list[float]],
     ~1.8 s to plan+run a fresh dim=64 agg plan vs 0.16 s to re-run it,
     on 2000 rows - the data work was 9% of the job).
 
-    Arithmetic is bit-identical to _assign_vectorized + the bigint
-    groupBy: same float64 cast, exact *2^20 + floor scaling, fold-order
-    per-dim distance accumulation, first-min argmin; int64 partial sums
-    of xi are exact and order-insensitive, so the merged totals equal
-    the flat bigint sums for any batching."""
+    Arithmetic is bit-identical to _assign + the bigint groupBy: same
+    float64 cast, exact *2^20 + floor scaling, foldmath.sq_dists,
+    first-min argmin; int64 partial sums of xi are exact and
+    order-insensitive, so the merged totals equal the flat bigint sums
+    for any batching."""
     cmat = np.array([[float(v) for v in c] for c in cents],
                     dtype=np.float64)
-    k = cmat.shape[0]
 
     def partial(batches):
         for pdf in batches:
@@ -253,15 +139,7 @@ def _iter_partial_sums(vecs: DataFrame, cents: list[list[float]],
             raw = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             xi = np.floor(raw * SCALE).astype(np.int64)
             mat = xi / SCALE                     # exact: 2^20 divide
-            n = mat.shape[0]
-            dmat = np.empty((n, k), dtype=np.float64)
-            for j in range(k):
-                acc = np.zeros(n, dtype=np.float64)
-                for i in range(dim):             # fold order: dims ascending
-                    d = mat[:, i] - cmat[j, i]
-                    acc = acc + d * d
-                dmat[:, j] = acc
-            cl = np.argmin(dmat, axis=1)         # first min == lowest cid
+            cl = np.argmin(sq_dists(mat, cmat), axis=1)  # lowest cid
             outs = []
             for c in np.unique(cl):
                 msk = cl == c
@@ -286,56 +164,32 @@ def _iter_partial_sums(vecs: DataFrame, cents: list[list[float]],
 
 
 def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 2,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               kernel: str | None = None) -> tuple[list[list[float]], int]:
+               id_col: str = "vec_id", vec_col: str = "embedding"
+               ) -> tuple[list[list[float]], int]:
     """Run `iters` Lloyd's updates and return (centroids, dim) - the
     driver-resident model. Deterministic: init centroids are the k rows
     with the smallest md5('seed|' || id) digests (ties -> lowest id,
     numbered 0..k-1 in hash order - no assumption about the id space),
     the iteration count is fixed (no data-dependent convergence branch),
     and every arithmetic step is engine-exact per the module docstring.
-    Empty clusters keep their previous centroid."""
-    if (kernel or DEFAULT_KERNEL) == "vectorized":
-        # r14 fast path (bit-identical, guide SS1.2 step 1): seeds come
-        # from ONE collect of raw vectors scaled driver-side, and each
-        # iteration is the partially-aggregating Arrow kernel - the
-        # legacy dim-wide agg plan below cost more to PLAN than to run.
-        init = (emb.select(id_col, vec_col,
-                           _seed_key(id_col).alias("_sk"))
-                .orderBy("_sk", id_col).limit(k).collect())
-        if len(init) != k:
-            raise ValueError(
-                f"k={k} seeds need >= k rows, got {len(init)}")
-        cents = [_scale_list(r[vec_col]) for r in init]
-        dim = len(cents[0])
-        vecs = emb.select(vec_col)
-        for _ in range(iters):
-            got = _iter_partial_sums(vecs, cents, dim, vec_col)
-            cents = [
-                [got[j][1][i] / (got[j][0] * SCALE) for i in range(dim)]
-                if j in got else cents[j]
-                for j in range(k)
-            ]
-        return cents, dim
+    Empty clusters keep their previous centroid.
 
-    x = _scaled(emb.select(id_col, vec_col), vec_col)
-
-    init = (x.select(id_col, "xd", _seed_key(id_col).alias("_sk"))
+    Seeds come from ONE collect of raw vectors scaled driver-side
+    (_scale_list), and each iteration is the partially-aggregating
+    Arrow kernel (_iter_partial_sums) - a dim-wide agg plan costs more
+    to PLAN than to run at this size."""
+    init = (emb.select(id_col, vec_col, _seed_key(id_col).alias("_sk"))
             .orderBy("_sk", id_col).limit(k).collect())
     if len(init) != k:
         raise ValueError(f"k={k} seeds need >= k rows, got {len(init)}")
-    cents = [list(r["xd"]) for r in init]
+    cents = [_scale_list(r[vec_col]) for r in init]
     dim = len(cents[0])
-
+    vecs = emb.select(vec_col)
     for _ in range(iters):
-        sums = (_assign(x, cents, dim, kernel).groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.sum(F.element_at("xi", i + 1)).alias(f"s{i}")
-              for i in range(dim)]))
-        by_cluster = {int(r["cluster"]): r for r in sums.collect()}
+        got = _iter_partial_sums(vecs, cents, dim, vec_col)
         cents = [
-            [int(r[f"s{i}"]) / (int(r["n"]) * SCALE) for i in range(dim)]
-            if (r := by_cluster.get(j)) is not None else cents[j]
+            [got[j][1][i] / (got[j][0] * SCALE) for i in range(dim)]
+            if j in got else cents[j]
             for j in range(k)
         ]
     return cents, dim
@@ -343,7 +197,6 @@ def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 2,
 
 def kmeans_transform(emb: DataFrame, cents: list[list[float]], dim: int,
                      id_col: str = "vec_id", vec_col: str = "embedding",
-                     kernel: str | None = None,
                      keep_vec: bool = False) -> DataFrame:
     """(id_col, cluster, centroid_dist) for a fitted model: one map-side
     pass, no shuffle. Because `cents` are plain literals, every call
@@ -359,13 +212,12 @@ def kmeans_transform(emb: DataFrame, cents: list[list[float]], dim: int,
     x = _scaled(emb.select(id_col, vec_col), vec_col)
     cols = [id_col] + ([vec_col] if keep_vec else []) \
         + ["cluster", "centroid_dist"]
-    return _assign(x, cents, dim, kernel).select(*cols)
+    return _assign(x, cents, dim).select(*cols)
 
 
 def kmeans_transform_topn(emb: DataFrame, cents: list[list[float]],
                           dim: int, n: int, id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          kernel: str | None = None) -> DataFrame:
+                          vec_col: str = "embedding") -> DataFrame:
     """(id_col, probe_rank, cluster): each row's `n` nearest centroids in
     distance order - the IVF probe-list assignment (faiss's
     `quantizer.search(x, nprobe)`), distributed. One map-side pass, no
@@ -373,52 +225,21 @@ def kmeans_transform_topn(emb: DataFrame, cents: list[list[float]],
     collect()-and-loop probe assignment, which at a production query
     batch of 1e6 rows is the classic driver bottleneck.
 
-    Kernels mirror _assign's contract:
-      * 'vectorized' (default): per-dim numpy column ops in fold order,
-        so every distance is bit-identical to the fold/oracle arithmetic;
-        ranking is a STABLE argsort (ties -> lowest cid), matching the
-        oracle's ROW_NUMBER() OVER (ORDER BY dist, cid).
-      * 'matmul': one dgemm per batch then np.argpartition(n) + a stable
-        sort of just the n winners - the large-k path, with the same
-        razor-tie caveat as _assign_matmul (expanded-form rounding), so
-        not the oracle default.
+    Distances are _assign's (foldmath.sq_dists, bit-identical to the
+    oracle arithmetic); ranking is a STABLE argsort (ties -> lowest
+    cid), matching the oracle's ROW_NUMBER() OVER (ORDER BY dist, cid).
     """
-    kernel = kernel or DEFAULT_KERNEL
     if not 1 <= n <= len(cents):
         raise ValueError(f"n={n} must be in [1, k={len(cents)}]")
-    use_matmul = kernel == "matmul"
     cmat = np.array([[float(v) for v in c] for c in cents],
                     dtype=np.float64)
-    cnorm = (cmat * cmat).sum(axis=1)
 
     @pandas_udf("array<bigint>")
     def topn(xd: pd.Series) -> pd.Series:
         mat = np.stack(xd.to_numpy())            # rows x dim float64
-        rows = mat.shape[0]
-        if use_matmul:
-            dmat = (mat * mat).sum(axis=1)[:, None] \
-                - 2.0 * (mat @ cmat.T) + cnorm[None, :]
-            if n < cmat.shape[0]:
-                part = np.argpartition(dmat, n - 1, axis=1)[:, :n]
-            else:
-                part = np.broadcast_to(np.arange(cmat.shape[0]),
-                                       (rows, cmat.shape[0])).copy()
-            # Order the n winners by (dist, cid): cid as the stable
-            # secondary key via a pre-sort of the partition indices.
-            part.sort(axis=1)
-            sub = np.take_along_axis(dmat, part, axis=1)
-            order = np.argsort(sub, axis=1, kind="stable")
-            probes = np.take_along_axis(part, order, axis=1)
-        else:
-            dmat = np.empty((rows, cmat.shape[0]), dtype=np.float64)
-            for j in range(cmat.shape[0]):
-                acc = np.zeros(rows, dtype=np.float64)
-                for i in range(dim):             # fold order: dims ascending
-                    d = mat[:, i] - cmat[j, i]
-                    acc = acc + d * d
-                dmat[:, j] = acc
-            # stable sort: equal distances keep ascending-cid order
-            probes = np.argsort(dmat, axis=1, kind="stable")[:, :n]
+        # stable sort: equal distances keep ascending-cid order
+        probes = np.argsort(sq_dists(mat, cmat), axis=1,
+                            kind="stable")[:, :n]
         return pd.Series(list(probes.astype(np.int64)))
 
     x = _scaled(emb.select(id_col, vec_col), vec_col)
@@ -429,12 +250,12 @@ def kmeans_transform_topn(emb: DataFrame, cents: list[list[float]],
 
 
 def kmeans_assign(emb: DataFrame, k: int = 8, iters: int = 2,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  kernel: str | None = None) -> DataFrame:
+                  id_col: str = "vec_id", vec_col: str = "embedding"
+                  ) -> DataFrame:
     """(id_col, cluster, cluster_size): fit + final assignment."""
-    cents, dim = kmeans_fit(emb, k, iters, id_col, vec_col, kernel)
+    cents, dim = kmeans_fit(emb, k, iters, id_col, vec_col)
     w = Window.partitionBy("cluster")
-    return (kmeans_transform(emb, cents, dim, id_col, vec_col, kernel)
+    return (kmeans_transform(emb, cents, dim, id_col, vec_col)
             .select(id_col, "cluster",
                     F.count(F.lit(1)).over(w).alias("cluster_size"))
             )
@@ -445,14 +266,12 @@ def kmeans_assign(emb: DataFrame, k: int = 8, iters: int = 2,
 # ---------------------------------------------------------------------------
 
 def _assign_fine(assigned: DataFrame, fine: list[list[list[float]]],
-                 dim: int, kernel: str | None = None,
+                 dim: int,
                  coarse_cents: list[list[float]] | None = None) -> DataFrame:
     """Adds `fine` (argmin over the k2 sub-centroids OF THE ROW'S coarse
     cluster; ties -> lowest fid) and `fine_dist` to a frame carrying
     (coarse, xd). Per-row cost is k2 x dim, NOT k1*k2 x dim - the whole
-    point of the hierarchy. Exact fold-order accumulation per coarse
-    group ('matmul' swaps in a dgemm per group with the winner's
-    distance recomputed exactly, same caveat as _assign_matmul).
+    point of the hierarchy. foldmath.sq_dists per coarse group.
 
     Empty-fine guard (ADVICE r4): a frozen two-level model applied to
     NEW data can route a row to a coarse cluster that had zero rows at
@@ -461,8 +280,6 @@ def _assign_fine(assigned: DataFrame, fine: list[list[list[float]]],
     coarse centroid itself (the IVF convention: an empty list's
     representative is its quantizer cell center); without it the empty
     case raises a clear error instead of crashing on None.T."""
-    kernel = kernel or DEFAULT_KERNEL
-    use_matmul = kernel == "matmul"
     fmats = [np.array(c, dtype=np.float64) if c else None for c in fine]
     if coarse_cents is not None:
         fmats = [m if m is not None
@@ -477,35 +294,15 @@ def _assign_fine(assigned: DataFrame, fine: list[list[list[float]]],
         out_d = np.zeros(len(co), dtype=np.float64)
         for c in np.unique(co):
             m = co == c
-            sub = mat[m]
             cm = fmats[c]
             if cm is None:
                 raise ValueError(
                     f"coarse cluster {c} has no fine centroids (empty at "
                     "fit time) and no coarse_cents fallback was provided")
-            if use_matmul:
-                dmat = ((sub * sub).sum(axis=1)[:, None]
-                        - 2.0 * (sub @ cm.T)
-                        + (cm * cm).sum(axis=1)[None, :])
-                sel = np.argmin(dmat, axis=1)
-                win = cm[sel]
-                acc = np.zeros(sub.shape[0], dtype=np.float64)
-                for i in range(dim):             # exact winner recompute
-                    d = sub[:, i] - win[:, i]
-                    acc = acc + d * d
-                out_f[m], out_d[m] = sel, acc
-            else:
-                dmat = np.empty((sub.shape[0], cm.shape[0]),
-                                dtype=np.float64)
-                for j in range(cm.shape[0]):
-                    acc = np.zeros(sub.shape[0], dtype=np.float64)
-                    for i in range(dim):         # fold order: dims ascending
-                        d = sub[:, i] - cm[j, i]
-                        acc = acc + d * d
-                    dmat[:, j] = acc
-                sel = np.argmin(dmat, axis=1)    # first min == lowest fid
-                out_f[m] = sel
-                out_d[m] = dmat[np.arange(sub.shape[0]), sel]
+            dmat = sq_dists(mat[m], cm)
+            sel = np.argmin(dmat, axis=1)        # first min == lowest fid
+            out_f[m] = sel
+            out_d[m] = dmat[np.arange(dmat.shape[0]), sel]
         return pd.DataFrame({"fine": out_f, "fine_dist": out_d})
 
     return (assigned.withColumn("_a", assign("coarse", "xd"))
@@ -517,8 +314,7 @@ def _assign_fine(assigned: DataFrame, fine: list[list[list[float]]],
 def kmeans_assign_twolevel(emb: DataFrame, k1: int = 4, k2: int = 3,
                            iters1: int = 1, iters2: int = 1,
                            id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           kernel: str | None = None) -> DataFrame:
+                           vec_col: str = "embedding") -> DataFrame:
     """Hierarchical Lloyd's: fit k1 coarse centroids on the corpus, then
     k2 sub-centroids WITHIN each coarse cluster (joint distributed
     iterations - one shuffle of k1*k2 x dim integer sums per pass, same
@@ -541,10 +337,10 @@ def kmeans_assign_twolevel(emb: DataFrame, k1: int = 4, k2: int = 3,
     keep their previous centroid - the full two-level run replays in
     SQL (plans/similarity.py _km2_oracle)."""
     coarse_cents, fine, dim = kmeans_fit_twolevel(
-        emb, k1, k2, iters1, iters2, id_col, vec_col, kernel)
+        emb, k1, k2, iters1, iters2, id_col, vec_col)
     w = Window.partitionBy("leaf")
     return (kmeans_transform_twolevel(emb, coarse_cents, fine, dim,
-                                      id_col, vec_col, kernel)
+                                      id_col, vec_col)
             .withColumn("leaf", F.col("coarse") * k2 + F.col("fine"))
             .select(id_col, "coarse", "fine", "leaf",
                     F.count(F.lit(1)).over(w).alias("leaf_size"))
@@ -558,9 +354,9 @@ def _iter_partial_sums_fine(assigned: DataFrame,
     """One fine-level Lloyd's iteration's {(coarse, fine): (n, [sums])}
     from a frame carrying (coarse, xi) - the two-level twin of
     _iter_partial_sums, same bit-exactness argument: xd = xi / 2^20 is
-    an exact power-of-two divide, distances accumulate in fold order
-    per coarse group exactly as _assign_fine's vectorized kernel, and
-    int64 partial sums are order-insensitive."""
+    an exact power-of-two divide, distances are foldmath.sq_dists per
+    coarse group exactly as in _assign_fine, and int64 partial sums are
+    order-insensitive."""
     fmats = [np.array(c, dtype=np.float64) if c else None for c in fine]
 
     def partial(batches):
@@ -579,16 +375,8 @@ def _iter_partial_sums_fine(assigned: DataFrame,
                         f"coarse cluster {c} has no fine centroids "
                         "(empty at fit time) and no coarse_cents "
                         "fallback was provided")
-                sub, sxi = mat[m], xi[m]
-                dmat = np.empty((sub.shape[0], cm.shape[0]),
-                                dtype=np.float64)
-                for j in range(cm.shape[0]):
-                    acc = np.zeros(sub.shape[0], dtype=np.float64)
-                    for i in range(dim):         # fold order: dims ascending
-                        d = sub[:, i] - cm[j, i]
-                        acc = acc + d * d
-                    dmat[:, j] = acc
-                sel = np.argmin(dmat, axis=1)    # first min == lowest fid
+                sxi = xi[m]
+                sel = np.argmin(sq_dists(mat[m], cm), axis=1)  # lowest fid
                 for f in np.unique(sel):
                     fm = sel == f
                     outs.append(pd.DataFrame({
@@ -618,7 +406,6 @@ def kmeans_fit_twolevel(emb: DataFrame, k1: int = 4, k2: int = 3,
                         iters1: int = 1, iters2: int = 1,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding",
-                        kernel: str | None = None,
                         return_assigned: bool = False,
                         carry: tuple[str, ...] = (),
                         ):
@@ -636,8 +423,7 @@ def kmeans_fit_twolevel(emb: DataFrame, k1: int = 4, k2: int = 3,
     the write). `carry` names payload columns (typically the raw
     vector) to ride the checkpoint for that reuse; it widens the
     checkpoint blocks, so callers opt in only when a build follows."""
-    coarse_cents, dim = kmeans_fit(emb, k1, iters1, id_col, vec_col,
-                                   kernel)
+    coarse_cents, dim = kmeans_fit(emb, k1, iters1, id_col, vec_col)
     keep = [c for c in carry if c not in (id_col, vec_col)]
     x = _scaled(emb.select(id_col, *keep, vec_col), vec_col)
     sel = [id_col, *keep] + ([vec_col] if vec_col in carry else [])
@@ -651,7 +437,7 @@ def kmeans_fit_twolevel(emb: DataFrame, k1: int = 4, k2: int = 3,
     # candidates - previously the eager checkpoint and the seed window
     # were two sequential jobs, and the window shuffled the whole
     # corpus by coarse id just to pick <= k1*k2 seed rows.
-    assigned = (_assign(x, coarse_cents, dim, kernel)
+    assigned = (_assign(x, coarse_cents, dim)
                 .select(*sel, "xi", "xd",
                         F.col("cluster").alias("coarse"))
                 .localCheckpoint(eager=False))
@@ -678,34 +464,14 @@ def kmeans_fit_twolevel(emb: DataFrame, k1: int = 4, k2: int = 3,
     for r in sorted(seed_rows, key=lambda r: (r["coarse"], r["_rn"])):
         fine[int(r["coarse"])].append(list(r["xd"]))
 
-    if (kernel or DEFAULT_KERNEL) == "vectorized":
-        # r14 fast path (bit-identical): the partially-aggregating
-        # Arrow kernel replaces the dim-wide agg plan, same as
-        # kmeans_fit's - see _iter_partial_sums_fine.
-        for _ in range(iters2):
-            gotp = _iter_partial_sums_fine(assigned, fine, dim)
-            fine = [
-                [[gotp[(c, f)][1][i] / (gotp[(c, f)][0] * SCALE)
-                  for i in range(dim)]
-                 if (c, f) in gotp else fine[c][f]
-                 for f in range(len(fine[c]))]
-                for c in range(k1)
-            ]
-        if return_assigned:
-            return coarse_cents, fine, dim, assigned
-        return coarse_cents, fine, dim
-
+    # Each iteration is the partially-aggregating Arrow kernel, same as
+    # kmeans_fit's - see _iter_partial_sums_fine.
     for _ in range(iters2):
-        sums = (_assign_fine(assigned, fine, dim, kernel)
-                .groupBy("coarse", "fine").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    *[F.sum(F.element_at("xi", i + 1)).alias(f"s{i}")
-                      for i in range(dim)]))
-        got = {(int(r["coarse"]), int(r["fine"])): r
-               for r in sums.collect()}
+        got = _iter_partial_sums_fine(assigned, fine, dim)
         fine = [
-            [[int(r[f"s{i}"]) / (int(r["n"]) * SCALE) for i in range(dim)]
-             if (r := got.get((c, f))) is not None else fine[c][f]
+            [[got[(c, f)][1][i] / (got[(c, f)][0] * SCALE)
+              for i in range(dim)]
+             if (c, f) in got else fine[c][f]
              for f in range(len(fine[c]))]
             for c in range(k1)
         ]
@@ -732,11 +498,11 @@ def kmeans_transform_topn_twolevel(emb: DataFrame,
     row (k1 + nprobe_coarse*k2)*dim work, never the flat kernel's
     k*dim.
 
-    Arithmetic mirrors probe_clusters_twolevel exactly: fold-order
-    per-dim accumulation for both levels, stable argsort (coarse ties
-    -> lowest cid; leaf ties -> lowest leaf id, because leaves are
-    enumerated in ascending (coarse, fine) order before the stable
-    sort), and a fit-time-empty coarse cell contributes its own
+    Arithmetic mirrors probe_clusters_twolevel exactly: foldmath.sq_dists
+    for both levels, stable argsort (coarse ties -> lowest cid; leaf
+    ties -> lowest leaf id, because leaves are enumerated in ascending
+    (coarse, fine) order before the stable sort), and a fit-time-empty
+    coarse cell contributes its own
     centroid as a fine=0 leaf. Rows sharing a visited-cells signature
     are scored together (one vectorized pass per distinct signature
     per batch - at most C(k1, nprobe_coarse) groups, typically a
@@ -753,21 +519,11 @@ def kmeans_transform_topn_twolevel(emb: DataFrame,
                 if fine[c] else np.array([c * k2], dtype=np.int64)
                 for c, m in enumerate(fmats)]
 
-    def _fold_dists(mat: np.ndarray, cm: np.ndarray) -> np.ndarray:
-        out = np.empty((mat.shape[0], cm.shape[0]), dtype=np.float64)
-        for j in range(cm.shape[0]):
-            acc = np.zeros(mat.shape[0], dtype=np.float64)
-            for i in range(dim):                 # fold order: dims ascending
-                d = mat[:, i] - cm[j, i]
-                acc = acc + d * d
-            out[:, j] = acc
-        return out
-
     @pandas_udf("array<bigint>")
     def topn(xd: pd.Series) -> pd.Series:
         mat = np.stack(xd.to_numpy())            # rows x dim float64
         rows = mat.shape[0]
-        coarse_d = _fold_dists(mat, cmat)
+        coarse_d = sq_dists(mat, cmat)
         visit = np.sort(np.argsort(coarse_d, axis=1,
                                    kind="stable")[:, :nprobe_coarse],
                         axis=1)                  # ascending cell ids
@@ -778,7 +534,7 @@ def kmeans_transform_topn_twolevel(emb: DataFrame,
             cells = [int(c) for c in sigs[g]]
             leaves = np.concatenate([leaf_ids[c] for c in cells])
             fmat = np.concatenate([fmats[c] for c in cells])
-            fd = _fold_dists(mat[idxs], fmat)
+            fd = sq_dists(mat[idxs], fmat)
             # ragged guard: visited cells can hold < n leaves total
             take = min(n, leaves.shape[0])
             order = np.argsort(fd, axis=1, kind="stable")[:, :take]
@@ -799,7 +555,6 @@ def kmeans_transform_twolevel(emb: DataFrame,
                               fine: list[list[list[float]]], dim: int,
                               id_col: str = "vec_id",
                               vec_col: str = "embedding",
-                              kernel: str | None = None,
                               keep_vec: bool = False) -> DataFrame:
     """(id_col, coarse, fine, fine_dist) for a fitted two-level model:
     one coarse pass + one partition-constrained fine pass, both
@@ -807,9 +562,8 @@ def kmeans_transform_twolevel(emb: DataFrame,
     kmeans_transform's."""
     x = _scaled(emb.select(id_col, vec_col), vec_col)
     keep = [vec_col] if keep_vec else []
-    assigned = (_assign(x, coarse_cents, dim, kernel)
+    assigned = (_assign(x, coarse_cents, dim)
                 .select(id_col, *keep, "xd",
                         F.col("cluster").alias("coarse")))
-    return (_assign_fine(assigned, fine, dim, kernel,
-                         coarse_cents=coarse_cents)
+    return (_assign_fine(assigned, fine, dim, coarse_cents=coarse_cents)
             .select(id_col, *keep, "coarse", "fine", "fine_dist"))

@@ -21,8 +21,9 @@ Spark mapping (all public API):
     iteration, 2 + iters jobs total (see pq_train); the model is
     m x ksub x d/m floats, driver-resident control-plane
     (m*ksub*dsub = 16k floats at the default shape);
-  * encoding is ONE map-side Arrow pass (argmin per subspace, the same
-    expanded-form dgemm trick as kmeans._assign_matmul);
+  * encoding is ONE map-side Arrow pass (argmin per subspace over
+    expanded-form ||x||^2 - 2 x.C^T + ||c||^2 distances, one dgemm per
+    batch and subspace);
   * ADC scoring broadcasts the codebooks + the query batch, builds the
     per-query LUTs inside the kernel once per Arrow batch, and scores
     with numpy fancy-indexing - no shuffle until the per-query top-k;
@@ -36,11 +37,12 @@ Determinism: codebook training inherits kmeans_fit's contract
 (md5-seeded, integer-scaled sums, fixed iters); encoding and ADC both
 use plain expanded-form numpy arithmetic (one dgemm per batch/
 subspace) - deterministic as a fixed numpy-ops replay, which is what
-the tests pin them to, but NOT fold-order: a razor tie between two
-codes can resolve differently than fold arithmetic would (the same
-caveat as kmeans._assign_matmul, and why `matmul` is not the kmeans
-oracle default). ADC scores are approximations by construction; the
-exact re-rank tail restores fold-order cosine for the final ranking.
+the tests pin them to, but NOT fold-order: the expanded form rounds
+differently than the operators/foldmath.py fold, so a razor tie
+between two codes can resolve differently than fold arithmetic would
+(why k-means assignment keeps the fold instead). ADC scores are
+approximations by construction; the exact re-rank tail restores
+fold-order cosine for the final ranking.
 
 Reference: /root/reference has no vector search at all; this extends
 SURVEY.md SS2-E (E47). Driver row since round 8: `pq_codes_rerank_topk`
@@ -388,7 +390,6 @@ def write_ivf_pq_layout(emb: DataFrame, cents: list[list[float]],
                         dim: int, codebooks: list[list[list[float]]],
                         path: str, id_col: str = "vec_id",
                         vec_col: str = "embedding",
-                        kernel: str | None = None,
                         mode: str = "overwrite",
                         files_per_cluster: int = 1) -> None:
     """The stored IVF-PQ index (VERDICT r7 #6): cluster directories
@@ -405,7 +406,7 @@ def write_ivf_pq_layout(emb: DataFrame, cents: list[list[float]],
     if files_per_cluster < 1:
         raise ValueError(f"files_per_cluster must be >= 1, "
                          f"got {files_per_cluster}")
-    _ivf_pq_routed(emb, cents, dim, codebooks, id_col, vec_col, kernel,
+    _ivf_pq_routed(emb, cents, dim, codebooks, id_col, vec_col,
                    files_per_cluster) \
         .write.partitionBy("cluster").mode(mode).parquet(path)
     from .ivf_layout import commit_layout_manifest
@@ -414,7 +415,7 @@ def write_ivf_pq_layout(emb: DataFrame, cents: list[list[float]],
 
 def _ivf_pq_routed(emb: DataFrame, cents: list[list[float]], dim: int,
                    codebooks: list[list[list[float]]], id_col: str,
-                   vec_col: str, kernel: str | None,
+                   vec_col: str,
                    files_per_cluster: int) -> DataFrame:
     """The flat IVF-PQ build plan, exposed for the no-self-join plan
     guard (tests/test_pq.py): cluster rides the encode projection
@@ -424,7 +425,7 @@ def _ivf_pq_routed(emb: DataFrame, cents: list[list[float]], dim: int,
     from .kmeans import _assign, _scaled
 
     assigned = (_assign(_scaled(emb.select(id_col, vec_col), vec_col),
-                        cents, dim, kernel)
+                        cents, dim)
                 .drop("xi", "xd", "centroid_dist"))
     coded = pq_encode(assigned, codebooks, id_col, vec_col,
                       passthrough=("cluster",))
@@ -436,7 +437,6 @@ def write_ivf_pq_layout_generation(emb: DataFrame,
                                    codebooks: list[list[list[float]]],
                                    path: str, id_col: str = "vec_id",
                                    vec_col: str = "embedding",
-                                   kernel: str | None = None,
                                    files_per_cluster: int = 1,
                                    max_retries: int = 5) -> int:
     """E49 for the PRODUCTION index: an immutable-generation rebuild of
@@ -456,7 +456,7 @@ def write_ivf_pq_layout_generation(emb: DataFrame,
 
     gen = f"gen={_uuid.uuid4().hex[:12]}"
     stage = os.path.join(path, gen)
-    _ivf_pq_routed(emb, cents, dim, codebooks, id_col, vec_col, kernel,
+    _ivf_pq_routed(emb, cents, dim, codebooks, id_col, vec_col,
                    files_per_cluster) \
         .write.partitionBy("cluster").mode("errorifexists").parquet(stage)
     return commit_generation_manifest(emb.sparkSession, path, gen,
@@ -468,8 +468,7 @@ def write_ivf_pq_layout_generation_twolevel(
         fine: list[list[list[float]]], k2: int, dim: int,
         codebooks: list[list[list[float]]], path: str,
         id_col: str = "vec_id", vec_col: str = "embedding",
-        kernel: str | None = None, files_per_cluster: int = 1,
-        max_retries: int = 5) -> int:
+        files_per_cluster: int = 1, max_retries: int = 5) -> int:
     """The two-level-quantizer generation rebuild - same contract as
     :func:`write_ivf_pq_layout_generation` with the O(n*sqrt(k)*dim)
     assignment (the build-scale half at corpus-scaled k)."""
@@ -484,7 +483,7 @@ def write_ivf_pq_layout_generation_twolevel(
     gen = f"gen={_uuid.uuid4().hex[:12]}"
     stage = os.path.join(path, gen)
     _ivf_pq_routed_twolevel(emb, coarse_cents, fine, k2, dim, codebooks,
-                            id_col, vec_col, kernel, files_per_cluster) \
+                            id_col, vec_col, files_per_cluster) \
         .write.partitionBy("cluster").mode("errorifexists").parquet(stage)
     return commit_generation_manifest(emb.sparkSession, path, gen,
                                       max_retries)
@@ -575,7 +574,6 @@ def write_ivf_pq_layout_twolevel(emb: DataFrame,
                                  codebooks: list[list[list[float]]],
                                  path: str, id_col: str = "vec_id",
                                  vec_col: str = "embedding",
-                                 kernel: str | None = None,
                                  mode: str = "overwrite",
                                  files_per_cluster: int = 1,
                                  coarse_assigned: DataFrame | None = None
@@ -608,7 +606,7 @@ def write_ivf_pq_layout_twolevel(emb: DataFrame,
         raise ValueError("a fine list exceeds the nominal k2 "
                          f"({max(len(fl) for fl in fine)} > {k2})")
     routed = _ivf_pq_routed_twolevel(emb, coarse_cents, fine, k2, dim,
-                                     codebooks, id_col, vec_col, kernel,
+                                     codebooks, id_col, vec_col,
                                      files_per_cluster, coarse_assigned)
     obs = Observation()
     (routed.observe(obs, F.count(F.lit(1)).alias("rows"))
@@ -624,7 +622,6 @@ def _ivf_pq_routed_twolevel(emb: DataFrame,
                             dim: int,
                             codebooks: list[list[list[float]]],
                             id_col: str, vec_col: str,
-                            kernel: str | None,
                             files_per_cluster: int,
                             coarse_assigned: DataFrame | None = None
                             ) -> DataFrame:
@@ -639,11 +636,10 @@ def _ivf_pq_routed_twolevel(emb: DataFrame,
         assigned = coarse_assigned
     else:
         assigned = (_assign(_scaled(emb.select(id_col, vec_col), vec_col),
-                            coarse_cents, dim, kernel)
+                            coarse_cents, dim)
                     .withColumnRenamed("cluster", "coarse")
                     .drop("centroid_dist"))
-    fined = (_assign_fine(assigned, fine, dim, kernel,
-                          coarse_cents=coarse_cents)
+    fined = (_assign_fine(assigned, fine, dim, coarse_cents=coarse_cents)
              .withColumn("cluster",
                          F.col("coarse") * k2 + F.col("fine"))
              .drop("xi", "xd", "coarse", "fine", "fine_dist"))

@@ -10,44 +10,21 @@ Scale shape: the quadratic pairwise stage is BOUNDED BY THE CLUSTER -
 that is the entire point of the k-means stage (choose k so clusters are
 ~1e5 rows and the within-cluster work is tractable at 100 TB); the
 centroids are a driver-resident literal model (operators/kmeans.py).
-Two strategies implement the within-cluster stage, bit-identical in
-output:
-  * 'grouped' (default): ONE applyInPandas over the cluster partition -
-    the corpus shuffles once (n rows, keyed on cluster) and all pair
-    dots happen blockwise in numpy inside the group; no pair relation
-    ever exists. Measured at the 30x curve point: 2.7x faster than the
-    join, because the join's dominant cost was shuffling ~n x
-    cluster_size (pair, vec, vec) rows.
-  * 'join': the equi-join spec below - one relation per stage, fully
-    plan-auditable, and the 1:1 mirror of the DuckDB oracle's SQL.
-
-Two materialization decisions matter for the JOIN strategy's cost
-(measured 3x+ at sf0.1):
-  * the (id, cluster, centroid_dist) assignment is localCheckpoint-ed
-    before self-joining - otherwise the join re-evaluates the k x dim
-    argmin expression per PROBE row (at 100 TB this relation is three
-    scalar columns you would persist to storage anyway, since both join
-    sides and the final verdict read it);
-  * vectors are L2-NORMALIZED once per row up front, so the per-pair
-    cosine is a single dot product instead of dot + two norms, and they
-    are attached to the pair relation by id equi-joins AFTER the cheap
-    dominance join prunes it.
-
-The per-pair dot has two kernels, bit-identical by construction (same
-float64 ops, same accumulation order - dims ascending from 0.0):
-  * 'vectorized' (default): Arrow-batched pandas_udf, per-dim numpy
-    column ops across the whole batch - the 100 TB path (the fold is an
-    interpreted expression tree per pair, the former 2nd-slowest kernel
-    in the engine per the round-3 audit);
-  * 'fold': F.aggregate(zip_with(...)) - the auditable spec the DuckDB
-    oracle mirrors 1:1. tests/test_semdedup.py cross-checks the two.
+The within-cluster stage is ONE applyInPandas over the cluster
+partition: the corpus shuffles once (n rows, keyed on cluster) and all
+pair dots happen blockwise in numpy inside the group - no pair relation
+ever exists (a pair relation shuffles ~n x cluster_size (pair, vec,
+vec) rows). Vectors are L2-normalized once per row inside the group, so
+the per-pair cosine is a single dot product instead of dot + two norms.
+The DuckDB oracle (semdedup_prune) states the same rule as an
+equi-join over the pair relation.
 
 Determinism: the kept-set depends only on (cluster assignment, pairwise
 normalized dots, centroid distances, ids) - all bit-identical
 cross-engine: the kmeans module's integer-exact arithmetic; one
-correctly-rounded IEEE division per normalized component; fixed-order
-accumulation for the dot. Dominance is the strict total order
-(centroid_dist DESC, id ASC), so ties cannot flap.
+correctly-rounded IEEE division per normalized component; the
+fold-order norms and dots of operators/foldmath.py. Dominance is the
+strict total order (centroid_dist DESC, id ASC), so ties cannot flap.
 """
 
 from __future__ import annotations
@@ -58,10 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .foldmath import norm2, outer_dots, row_dots
 from .kmeans import kmeans_fit, kmeans_transform
-
-#: Default pair-dot kernel; tests flip this to cross-check bit-equality.
-DEFAULT_KERNEL = "vectorized"
 
 
 def normalized_vectors(emb: DataFrame, id_col: str = "vec_id",
@@ -77,17 +52,14 @@ def normalized_vectors(emb: DataFrame, id_col: str = "vec_id",
     CodegenFallback (interpreted per element, ~0.35 ms/row measured),
     so corpus- or candidate-sized normalization pays seconds that the
     batched numpy twin does not. Bit-identical: the n2 accumulation
-    runs per dim in fold order, and each element's double widening /
+    is foldmath.norm2, and each element's double widening /
     divide-by-sqrt are single correctly-rounded IEEE ops either way
     (pinned in tests/test_semdedup.py)."""
     if kernel == "vectorized":
         @pandas_udf("array<double>")
         def nvec(rv: pd.Series) -> pd.Series:
             x = np.stack(rv.to_numpy()).astype(np.float64)
-            n2 = np.zeros(x.shape[0], dtype=np.float64)
-            for i in range(x.shape[1]):      # fold order: dims ascending
-                n2 = n2 + x[:, i] * x[:, i]
-            return pd.Series(list(x / np.sqrt(n2)[:, None]))
+            return pd.Series(list(x / np.sqrt(norm2(x))[:, None]))
 
         return emb.select(id_col, nvec(vec_col).alias("nv"))
     return (emb
@@ -107,8 +79,8 @@ def norm_dot(raw: str, qnv: str) -> Column:
     divide -> pair_dot) whose CodegenFallback evaluation dominated the
     candidate-sized tails (r14, guide SS4.1: ~0.35 ms/row interpreted
     vs one batched kernel). Bit-identical to that chain: n2 and the
-    dot both accumulate per dim in fold order from zero, the divide is
-    one IEEE op per element, and the dot consumes the SAME divided
+    dot are foldmath.norm2 / row_dots, the divide is one IEEE op per
+    element, and the dot consumes the SAME divided
     doubles the transform would have produced (Arrow transport of
     float64 is lossless, so fusing skips only the round-trip, not any
     rounding step). Pinned in tests/test_semdedup.py."""
@@ -116,63 +88,22 @@ def norm_dot(raw: str, qnv: str) -> Column:
     def nd(rv: pd.Series, qv: pd.Series) -> pd.Series:
         x = np.stack(rv.to_numpy()).astype(np.float64)
         q = np.stack(qv.to_numpy()).astype(np.float64)
-        n2 = np.zeros(x.shape[0], dtype=np.float64)
-        for i in range(x.shape[1]):          # fold order: dims ascending
-            n2 = n2 + x[:, i] * x[:, i]
-        nv = x / np.sqrt(n2)[:, None]
-        acc = np.zeros(x.shape[0], dtype=np.float64)
-        for i in range(x.shape[1]):          # fold order: dims ascending
-            acc = acc + q[:, i] * nv[:, i]
-        return pd.Series(acc)
+        nv = x / np.sqrt(norm2(x))[:, None]
+        return pd.Series(row_dots(q, nv))
 
     return nd(raw, qnv)
 
 
-def _pair_dot_fold(a: str, b: str) -> Column:
-    """Sequential-fold dot of two double-array columns (the spec the
-    oracle mirrors): products in dim order, summed from 0.0."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _pair_dot_vectorized(a: str, b: str) -> Column:
-    """Arrow-batched dot: numpy column ops per dim, accumulated in dim
-    order from a zero vector - the same rounding sequence as the fold,
-    batched across pairs instead of interpreted per pair."""
+def pair_dot(a: str, b: str) -> Column:
+    """Arrow-batched dot of two double-array columns: foldmath.row_dots,
+    batched across pairs."""
     @pandas_udf("double")
     def dot(av: pd.Series, bv: pd.Series) -> pd.Series:
-        amat = np.stack(av.to_numpy())
-        bmat = np.stack(bv.to_numpy())
-        acc = np.zeros(amat.shape[0], dtype=np.float64)
-        for i in range(amat.shape[1]):       # fold order: dims ascending
-            acc = acc + amat[:, i] * bmat[:, i]
-        return pd.Series(acc)
+        return pd.Series(row_dots(np.stack(av.to_numpy()),
+                                  np.stack(bv.to_numpy())))
 
     return dot(a, b)
 
-
-def pair_dot(a: str, b: str, kernel: str | None = None) -> Column:
-    kernel = kernel or DEFAULT_KERNEL
-    # 'matmul' exists only for the ASSIGNMENT stage (operators/kmeans.py
-    # large-k kernel); the pair dot is already blockwise numpy, so it
-    # maps to the vectorized fold-order kernel unchanged.
-    if kernel in ("vectorized", "matmul"):
-        return _pair_dot_vectorized(a, b)
-    if kernel == "fold":
-        return _pair_dot_fold(a, b)
-    raise ValueError(f"unknown kernel: {kernel}")
-
-
-#: Default pairwise strategy. 'grouped' runs the within-cluster stage
-#: as ONE applyInPandas over the cluster partition: the corpus shuffles
-#: once (n rows, on cluster id) and every pair dot happens in numpy
-#: inside the group - no pair RELATION ever exists, where the 'join'
-#: strategy shuffles ~n x cluster_size (pair, vec, vec) rows (measured
-#: at the 30x curve point: the pair shuffle dominated the whole
-#: operator). Verdicts are bit-identical across strategies (pinned in
-#: tests): the grouped kernel normalizes and accumulates per dim in
-#: fold order, blockwise so memory is block x cluster, never cluster^2.
-DEFAULT_STRATEGY = "grouped"
 
 #: Rows per block in the grouped kernel's blockwise dot (memory is
 #: PAIR_BLOCK x cluster_size doubles per group).
@@ -180,13 +111,12 @@ PAIR_BLOCK = 1024
 
 
 def _semdedup_grouped(assigned_emb: DataFrame, threshold: float,
-                      id_col: str, vec_col: str, dim: int,
+                      id_col: str, vec_col: str,
                       emit_pool: bool = False) -> DataFrame:
     """Per-cluster applyInPandas verdict kernel. `assigned_emb` carries
     (id_col, cluster, centroid_dist, vec_col). Bit-exactness with the
-    join strategy (and the SQL oracle): squared norm accumulates per
-    dim in fold order; each normalized component is one IEEE division;
-    pair dots accumulate per dim in fold order via outer products.
+    SQL oracle: foldmath.norm2 squared norms; each normalized component
+    is one IEEE division; foldmath.outer_dots pair dots.
 
     `emit_pool=True` additionally passes (centroid_dist, vec_col)
     through the output (r14, guide SS2.1): the incremental bootstrap
@@ -200,19 +130,13 @@ def _semdedup_grouped(assigned_emb: DataFrame, threshold: float,
         x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64,
                                                      copy=False)
         m = x.shape[0]
-        n2 = np.zeros(m, dtype=np.float64)
-        for i in range(dim):                 # fold order: dims ascending
-            n2 = n2 + x[:, i] * x[:, i]
-        nv = x / np.sqrt(n2)[:, None]
+        nv = x / np.sqrt(norm2(x))[:, None]
         dist = pdf["centroid_dist"].to_numpy()
         ids = pdf[id_col].to_numpy()
         kept = np.ones(m, dtype=bool)
         for s in range(0, m, PAIR_BLOCK):
             blk = slice(s, min(s + PAIR_BLOCK, m))
-            dots = np.zeros((blk.stop - blk.start, m), dtype=np.float64)
-            for i in range(dim):             # fold order per pair
-                dots = dots + np.outer(nv[blk, i], nv[:, i])
-            near = dots >= threshold
+            near = outer_dots(nv[blk], nv) >= threshold
             dom = ((dist[None, :] > dist[blk, None])
                    | ((dist[None, :] == dist[blk, None])
                       & (ids[None, :] < ids[blk, None])))
@@ -235,8 +159,7 @@ def _semdedup_grouped(assigned_emb: DataFrame, threshold: float,
 
 
 def _semdedup_incremental_grouped(pool_emb: DataFrame, threshold: float,
-                                  id_col: str, vec_col: str,
-                                  dim: int) -> DataFrame:
+                                  id_col: str, vec_col: str) -> DataFrame:
     """Per-cluster applyInPandas kernel for the INCREMENTAL stage:
     `pool_emb` carries (id_col, cluster, centroid_dist, vec_col,
     is_delta) where is_delta=False rows are the standing corpus's
@@ -254,16 +177,13 @@ def _semdedup_incremental_grouped(pool_emb: DataFrame, threshold: float,
     dropped in the standing pass), this equals _semdedup_grouped over
     (keepers UNION delta) under the frozen assignment - the equivalence
     tests/test_semdedup_incremental.py pins. Arithmetic is bit-identical
-    to _semdedup_grouped: fold-order norms, one IEEE division per
-    component, fold-order outer-product dots."""
+    to _semdedup_grouped: foldmath norms, one IEEE division per
+    component, foldmath outer-product dots."""
     def verdicts(pdf: pd.DataFrame) -> pd.DataFrame:
         x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64,
                                                      copy=False)
         m = x.shape[0]
-        n2 = np.zeros(m, dtype=np.float64)
-        for i in range(dim):                 # fold order: dims ascending
-            n2 = n2 + x[:, i] * x[:, i]
-        nv = x / np.sqrt(n2)[:, None]
+        nv = x / np.sqrt(norm2(x))[:, None]
         dist = pdf["centroid_dist"].to_numpy()
         ids = pdf[id_col].to_numpy()
         is_delta = pdf["is_delta"].to_numpy().astype(bool)
@@ -271,10 +191,7 @@ def _semdedup_incremental_grouped(pool_emb: DataFrame, threshold: float,
         didx = np.flatnonzero(is_delta)
         for s in range(0, didx.size, PAIR_BLOCK):
             bi = didx[s:s + PAIR_BLOCK]
-            dots = np.zeros((bi.size, m), dtype=np.float64)
-            for i in range(dim):             # fold order per pair
-                dots = dots + np.outer(nv[bi, i], nv[:, i])
-            near = dots >= threshold
+            near = outer_dots(nv[bi], nv) >= threshold
             other = ids[None, :] != ids[bi, None]
             # pool member y (cols) dominates delta row x (block rows)
             dom_y = ((dist[None, :] > dist[bi, None])
@@ -304,7 +221,6 @@ def semdedup_incremental(standing: DataFrame, delta: DataFrame,
                          threshold: float = 0.35,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding",
-                         kernel: str | None = None,
                          standing_verdicts: DataFrame | None = None,
                          model: tuple[list[list[float]], int] | None = None
                          ) -> DataFrame:
@@ -336,9 +252,9 @@ def semdedup_incremental(standing: DataFrame, delta: DataFrame,
     standing rows are not re-emitted - they left the corpus when the
     standing state was built."""
     cents, dim = model if model is not None else kmeans_fit(
-        standing, k, iters, id_col, vec_col, kernel)
+        standing, k, iters, id_col, vec_col)
     s_pool = kmeans_transform(standing, cents, dim, id_col, vec_col,
-                              kernel, keep_vec=True)
+                              keep_vec=True)
     if standing_verdicts is None:
         # Bootstrap (r14, guide SS2.1): ONE verdict-kernel pass emits
         # assignment + vector + verdict together (emit_pool), so the
@@ -346,7 +262,7 @@ def semdedup_incremental(standing: DataFrame, delta: DataFrame,
         # joined verdict ids back to a SECOND execution of the
         # assignment kernel and a third standing scan.
         keepers = (_semdedup_grouped(s_pool, threshold, id_col, vec_col,
-                                     dim, emit_pool=True)
+                                     emit_pool=True)
                    .filter(F.col("kept")).drop("kept")
                    .withColumn("is_delta", F.lit(False)))
     else:
@@ -354,20 +270,18 @@ def semdedup_incremental(standing: DataFrame, delta: DataFrame,
                    .select(id_col)
                    .join(s_pool, id_col)
                    .withColumn("is_delta", F.lit(False)))
-    d_pool = (kmeans_transform(delta, cents, dim, id_col, vec_col, kernel,
+    d_pool = (kmeans_transform(delta, cents, dim, id_col, vec_col,
                                keep_vec=True)
               .withColumn("is_delta", F.lit(True)))
     cols = [id_col, "cluster", "centroid_dist", vec_col, "is_delta"]
     pool = keepers.select(*cols).unionByName(d_pool.select(*cols))
-    return _semdedup_incremental_grouped(pool, threshold, id_col,
-                                         vec_col, dim)
+    return _semdedup_incremental_grouped(pool, threshold, id_col, vec_col)
 
 
 def semdedup_twolevel(emb: DataFrame, k1: int = 8, k2: int = 8,
                       iters1: int = 1, iters2: int = 1,
                       threshold: float = 0.35, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      kernel: str | None = None) -> DataFrame:
+                      vec_col: str = "embedding") -> DataFrame:
     """(id_col, cluster, kept): SemDeDup with the TWO-LEVEL k-means as
     the bounding device - cluster = the k1*k2 leaf, centroid_dist = the
     distance to the LEAF sub-centroid. This is the composed 100 TB
@@ -382,70 +296,28 @@ def semdedup_twolevel(emb: DataFrame, k1: int = 8, k2: int = 8,
     from .kmeans import kmeans_fit_twolevel, kmeans_transform_twolevel
 
     coarse_cents, fine, dim = kmeans_fit_twolevel(
-        emb, k1, k2, iters1, iters2, id_col, vec_col, kernel)
+        emb, k1, k2, iters1, iters2, id_col, vec_col)
     assigned_emb = (kmeans_transform_twolevel(emb, coarse_cents, fine,
                                               dim, id_col, vec_col,
-                                              kernel, keep_vec=True)
+                                              keep_vec=True)
                     .select(id_col, vec_col,
                             (F.col("coarse") * k2 + F.col("fine"))
                             .alias("cluster"),
                             F.col("fine_dist").alias("centroid_dist")))
-    return _semdedup_grouped(assigned_emb, threshold, id_col,
-                             vec_col, dim)
+    return _semdedup_grouped(assigned_emb, threshold, id_col, vec_col)
 
 
 def semdedup(emb: DataFrame, k: int = 8, iters: int = 2,
              threshold: float = 0.35, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             kernel: str | None = None,
-             strategy: str | None = None) -> DataFrame:
+             vec_col: str = "embedding") -> DataFrame:
     """(id_col, cluster, kept): kept=False for every member dominated by
     a same-cluster neighbor with cosine >= threshold that sits farther
     from the centroid (ties: lower id dominates). Keep-filtering is
     `WHERE kept` downstream; emitting the verdict per row keeps the
-    relation auditable. `strategy`: 'grouped' (default - applyInPandas
-    per cluster, no pair relation) or 'join' (the equi-join spec the
-    module docstring describes; same verdicts bit-for-bit)."""
-    strategy = strategy or DEFAULT_STRATEGY
-    cents, dim = kmeans_fit(emb, k, iters, id_col, vec_col, kernel)
-    if strategy == "grouped":
-        # keep_vec (r14): the assignment pass carries the vector through
-        # instead of a corpus-wide id equi-join re-attaching it.
-        assigned_emb = kmeans_transform(emb, cents, dim, id_col,
-                                        vec_col, kernel, keep_vec=True)
-        return _semdedup_grouped(assigned_emb, threshold, id_col,
-                                 vec_col, dim)
-    if strategy != "join":
-        raise ValueError(f"unknown strategy: {strategy}")
-    # Three scalar columns; both join sides + the verdict read it.
-    assigned = kmeans_transform(emb, cents, dim, id_col, vec_col, kernel) \
-        .localCheckpoint()
-    # corpus-sized: the Arrow normalization kernel, not the interpreted
-    # HOF expressions (r14; bit-identical, see normalized_vectors)
-    nv = normalized_vectors(emb, id_col, vec_col,
-                            kernel="vectorized").localCheckpoint()
-
-    a, b = assigned.alias("a"), assigned.alias("b")
-    dominance = (
-        (F.col("a.cluster") == F.col("b.cluster"))
-        & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        & ((F.col("b.centroid_dist") > F.col("a.centroid_dist"))
-           | ((F.col("b.centroid_dist") == F.col("a.centroid_dist"))
-              & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}")))))
-    nva = nv.select(F.col(id_col).alias("_ida"), F.col("nv").alias("nva"))
-    nvb = nv.select(F.col(id_col).alias("_idb"), F.col("nv").alias("nvb"))
-    dot = pair_dot("nva", "nvb", kernel)
-    dominated = (
-        a.join(b, dominance)
-        .join(nva, F.col(f"a.{id_col}") == F.col("_ida"))
-        .join(nvb, F.col(f"b.{id_col}") == F.col("_idb"))
-        .repartition(F.col(f"a.{id_col}"))
-        .filter(dot >= threshold)
-        .select(F.col(f"a.{id_col}").alias("_dropped_id"))
-        .distinct())
-
-    return (assigned
-            .join(dominated,
-                  F.col(id_col) == F.col("_dropped_id"), "left")
-            .select(id_col, "cluster",
-                    F.col("_dropped_id").isNull().alias("kept")))
+    relation auditable."""
+    cents, dim = kmeans_fit(emb, k, iters, id_col, vec_col)
+    # keep_vec (r14): the assignment pass carries the vector through
+    # instead of a corpus-wide id equi-join re-attaching it.
+    assigned_emb = kmeans_transform(emb, cents, dim, id_col, vec_col,
+                                    keep_vec=True)
+    return _semdedup_grouped(assigned_emb, threshold, id_col, vec_col)

@@ -3,9 +3,10 @@ brute-force cosine top-k baseline + LSH-bucketed scale path + embedding
 near-dup pairs.
 
 Float determinism: embeddings are float32; both engines widen each element
-to float64 before multiplying, and the dot product is a *sequential left
-fold* over the array (Spark `aggregate`, DuckDB `list_reduce`) - identical
-operation order => bit-identical doubles => hashable across engines.
+to float64 before multiplying, and every dot product and squared norm is a
+*sequential left fold* over the array (the engine's Arrow kernels through
+operators/foldmath.py, DuckDB `list_reduce`) - identical operation order
+=> bit-identical doubles => hashable across engines.
 
 Scale design (100 TB):
   * brute force is the correctness baseline: queries x corpus equi-free
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load_table, steps_frame
+from ..operators.foldmath import norm2, outer_dots, row_dots
 from .registry import register
 
 N_QUERIES = 5
@@ -37,63 +39,20 @@ TOP_K = 10
 LSH_BITS = 8
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product (order-deterministic, float64) - the
-    auditable spec the DuckDB oracles mirror 1:1 (list_reduce over the
-    zipped products). Hot paths use :func:`_cosine` / the signature
-    kernel instead; bit-equality between the two is pinned in
-    tests/test_sim_quality.py."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm2(a: Column) -> Column:
-    return F.aggregate(a, F.lit(0.0),
-                       lambda acc, v: acc + v.cast("double") * v.cast("double"))
-
-
-def _cosine_fold(a: Column, b: Column) -> Column:
-    return (_dot(a, b) / (F.sqrt(_norm2(a)) * F.sqrt(_norm2(b))))
-
-
-def _cosine_vectorized(a: Column, b: Column) -> Column:
-    """Arrow-batched cosine: per-dim numpy column ops accumulated in dim
-    order from 0.0 - the identical float64 rounding sequence as the
-    fold (widen float32->float64 exactly, multiply, add in dim order;
-    then the same dot/(sqrt*sqrt) combination), batched across rows
-    instead of interpreted per row. ONE Arrow pass computes dot and
-    both norms, where the fold expression walked three interpreted
-    trees per row."""
+def _cosine(a: Column, b: Column) -> Column:
+    """Arrow-batched cosine dot / (sqrt(n2a) * sqrt(n2b)): the dot and
+    both squared norms are foldmath.row_dots / norm2 (widen
+    float32->float64 exactly, multiply, add in dim order from 0.0) - the
+    operation sequence the _SQL_DOT / _SQL_NORM2 oracle twins replay -
+    batched across rows in ONE Arrow pass."""
     @pandas_udf("double")
     def cos(av: pd.Series, bv: pd.Series) -> pd.Series:
         amat = np.stack(av.to_numpy()).astype(np.float64, copy=False)
         bmat = np.stack(bv.to_numpy()).astype(np.float64, copy=False)
-        n = amat.shape[0]
-        dot = np.zeros(n, dtype=np.float64)
-        n2a = np.zeros(n, dtype=np.float64)
-        n2b = np.zeros(n, dtype=np.float64)
-        for i in range(amat.shape[1]):       # fold order: dims ascending
-            x, y = amat[:, i], bmat[:, i]
-            dot = dot + x * y
-            n2a = n2a + x * x
-            n2b = n2b + y * y
-        return pd.Series(dot / (np.sqrt(n2a) * np.sqrt(n2b)))
+        return pd.Series(row_dots(amat, bmat)
+                         / (np.sqrt(norm2(amat)) * np.sqrt(norm2(bmat))))
 
     return cos(a, b)
-
-
-#: Default cosine kernel; tests flip this to cross-check bit-equality.
-COSINE_KERNEL = "vectorized"
-
-
-def _cosine(a: Column, b: Column, kernel: str | None = None) -> Column:
-    kernel = kernel or COSINE_KERNEL
-    if kernel == "vectorized":
-        return _cosine_vectorized(a, b)
-    if kernel == "fold":
-        return _cosine_fold(a, b)
-    raise ValueError(f"unknown kernel: {kernel}")
 
 
 _SQL_DOT = ("list_reduce(list_transform(list_zip({a}, {b}), "
@@ -267,49 +226,26 @@ def _hyperplane_coeff(table: int, bit: int, dim: int) -> list[float]:
 
 
 def multitable_signatures(emb: DataFrame, k_bits: int = 4,
-                          n_tables: int = 8, dim: int = 64,
-                          kernel: str | None = None) -> DataFrame:
+                          n_tables: int = 8, dim: int = 64) -> DataFrame:
     """Add sig_0..sig_{L-1} bigint signature columns (one per table):
     bit k of sig_t = sign of the dot product with hyperplane (t, k).
 
-    Default kernel is the Arrow-batched pandas_udf: all L*K hyperplane
-    dots per row in one UDF call, coefficients a closure-held numpy
-    matrix (never shipped per row), per-dim accumulation in fold order
-    so the signatures are bit-identical to the 'fold' spec kernel (and
-    to the SQL replay in _ann_recall_oracle, which mirrors the fold)."""
-    kernel = kernel or COSINE_KERNEL
-    if kernel == "fold":
-        sig_cols = []
-        for t in range(n_tables):
-            acc = F.lit(0).cast("bigint")
-            for k in range(k_bits):
-                coeffs = F.array(*[F.lit(v) for v in
-                                   _hyperplane_coeff(t, k, dim)])
-                acc = acc + F.when(_dot(F.col("embedding"), coeffs) >= 0,
-                                   F.lit(1 << k).cast("bigint")).otherwise(
-                                       F.lit(0).cast("bigint"))
-            sig_cols.append(acc.alias(f"sig_{t}"))
-        return emb.select("vec_id", "label", "embedding", *sig_cols)
-    if kernel != "vectorized":
-        raise ValueError(f"unknown kernel: {kernel}")
-
-    cmat = np.array([[_hyperplane_coeff(t, k, dim) for k in range(k_bits)]
-                     for t in range(n_tables)], dtype=np.float64)
+    One Arrow-batched pandas_udf computes all L*K hyperplane dots per
+    row with foldmath.outer_dots against a closure-held coefficient
+    matrix (never shipped per row), so the signatures are bit-identical
+    to the SQL replay in _ann_recall_oracle."""
+    cmat = np.array([_hyperplane_coeff(t, k, dim)
+                     for t in range(n_tables) for k in range(k_bits)],
+                    dtype=np.float64)            # row t*K + k
+    shifts = np.arange(k_bits, dtype=np.int64)
 
     @pandas_udf("array<bigint>")
     def sigs(ev: pd.Series) -> pd.Series:
         emat = np.stack(ev.to_numpy()).astype(np.float64, copy=False)
-        n = emat.shape[0]
-        out = np.zeros((n, cmat.shape[0]), dtype=np.int64)
-        for t in range(cmat.shape[0]):
-            for k in range(cmat.shape[1]):
-                acc = np.zeros(n, dtype=np.float64)
-                for i in range(dim):         # fold order: dims ascending
-                    acc = acc + emat[:, i] * cmat[t, k, i]
-                # >= 0 matches the fold's F.when(dot >= 0, ...): -0.0
-                # compares >= 0 in numpy exactly as in Spark SQL.
-                out[:, t] += (acc >= 0).astype(np.int64) << k
-        return pd.Series(list(out))
+        # >= 0 matches the oracle's `dot >= 0`: -0.0 compares >= 0 in
+        # numpy exactly as in SQL.
+        pos = (outer_dots(emat, cmat) >= 0).reshape(-1, n_tables, k_bits)
+        return pd.Series(list((pos.astype(np.int64) << shifts).sum(axis=2)))
 
     return (emb.withColumn("_sigs", sigs("embedding"))
             .select("vec_id", "label", "embedding",
@@ -371,7 +307,7 @@ _ANN_RECALL_FLOOR = 0.4
 def _sql_coeff_list(table: int, bit: int, dim: int) -> str:
     """The hyperplane (t, k) as a DuckDB DOUBLE[] literal. repr() of a
     Python float round-trips through decimal to the identical double in
-    both engines (Spark gets the same values via F.lit)."""
+    both engines (the signature kernel holds the same Python floats)."""
     return ("CAST([" + ", ".join(
         repr(v) for v in _hyperplane_coeff(table, bit, dim))
         + "] AS DOUBLE[])")
@@ -545,7 +481,7 @@ _KM_SCALE = 1 << 20
 #: One assignment pass as SQL: squared euclidean to each centroid in
 #: relation {cents}, folded over dims in index order from a 0.0
 #: accumulator (list_reduce(list_prepend(...)) - the same operation
-#: sequence as the engine's F.aggregate fold), argmin tie-broken on the
+#: sequence as the engine's foldmath.sq_dists), argmin tie-broken on the
 #: lowest centroid id.
 #: `{pred}` restricts which rows get assigned (TRUE = all) - the
 #: incremental variant fits on the standing corpus and assigns the
@@ -1597,7 +1533,7 @@ def _pq_codes_oracle() -> str:
     Razor-tie caveat (module docstring of operators/pq.py): the engine
     encodes by expanded-form argmin while this replay folds in dim
     order - equal except within ~1 ulp ties, absent in the fixtures
-    (same accepted tradeoff as kmeans' matmul kernel)."""
+    (the accepted tradeoff for PQ's dgemm encode)."""
     k = _ANN_TOP_K
     return f"""
 WITH{_pq_train_chain()},
@@ -1991,7 +1927,7 @@ def ivf_generation_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import _assign, _scaled
 
     assigned = (_assign(_scaled(emb.select("vec_id", "embedding"),
-                                "embedding"), cents, dim, None)
+                                "embedding"), cents, dim)
                 .drop("xi", "xd", "centroid_dist")
                 .localCheckpoint(eager=False))
     half = assigned.filter(F.col("vec_id") % 2 == 0)

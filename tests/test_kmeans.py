@@ -5,6 +5,8 @@ quality floor against the embeddings table's ground-truth labels."""
 
 from __future__ import annotations
 
+import hashlib
+import math
 from collections import Counter, defaultdict
 
 import pytest
@@ -63,67 +65,65 @@ def test_iterations_do_not_increase_inertia(spark, emb):
     assert inertia(2) <= inertia(0) + 1e-9
 
 
+def _fold_sq(x, c):
+    """Squared euclidean distance as a pure-Python left fold over the
+    dims from 0.0 - the arithmetic the oracle and the kernel share."""
+    acc = 0.0
+    for xv, cv in zip(x, c):
+        d = xv - cv
+        acc = acc + d * d
+    return acc
+
+
+def _lloyd_replay(rows, k, iters):
+    """Pure-Python kmeans_fit + kmeans_transform: md5-keyed seeds,
+    floor-scaled components, integer per-cluster sums with one exact
+    division per centroid component, fold-order distances, first-min
+    argmin. Returns (centroids, {vec_id: (cluster, centroid_dist)})."""
+    scale = 1 << 20
+    xi = {vid: [math.floor(float(v) * scale) for v in vec]
+          for vid, vec in rows}
+    xd = {vid: [a / scale for a in comps] for vid, comps in xi.items()}
+    seeds = sorted(xi, key=lambda vid: (
+        hashlib.md5(f"seed|{vid}".encode()).hexdigest(), vid))[:k]
+    cents = [xd[vid] for vid in seeds]
+
+    def assign(vid):
+        ds = [_fold_sq(xd[vid], c) for c in cents]
+        j = min(range(len(ds)), key=ds.__getitem__)   # first minimum
+        return j, ds[j]
+
+    for _ in range(iters):
+        sums = {}
+        for vid in xi:
+            j, _ = assign(vid)
+            n, acc = sums.get(j, (0, [0] * len(xi[vid])))
+            sums[j] = (n + 1, [a + b for a, b in zip(acc, xi[vid])])
+        cents = [[s / (sums[j][0] * scale) for s in sums[j][1]]
+                 if j in sums else cents[j] for j in range(k)]
+    return cents, {vid: assign(vid) for vid in xi}
+
+
 def test_kernels_bit_identical(spark, emb):
-    """The Arrow-batched numpy kernel must agree with the interpreted
-    fold EXACTLY - same centroids (the fit consumes assignments) and
-    bit-equal centroid distances - because both accumulate squared
-    diffs in dim order from 0.0 with the same IEEE float64 ops."""
+    """The Arrow kernel must reproduce a pure-Python Lloyd's replay
+    EXACTLY - same centroids (the fit consumes assignments) and
+    bit-equal centroid distances - because both fold squared diffs over
+    the dims in ascending order from 0.0 with the same IEEE float64
+    ops (operators/foldmath.py)."""
     from etl_pipeline_mini_project_01_spark.operators.kmeans import (
         kmeans_fit,
         kmeans_transform,
     )
 
-    sub = emb.limit(120)
-    cents_v, dim_v = kmeans_fit(sub, k=3, iters=2, kernel="vectorized")
-    cents_f, dim_f = kmeans_fit(sub, k=3, iters=2, kernel="fold")
-    assert (dim_v, cents_v) == (dim_f, cents_f)
+    cents, dim = kmeans_fit(emb, k=5, iters=2)
+    got = {r.vec_id: (r.cluster, r.centroid_dist) for r in
+           kmeans_transform(emb, cents, dim).collect()}
 
-    tv = sorted((r.vec_id, r.cluster, r.centroid_dist) for r in
-                kmeans_transform(sub, cents_v, dim_v,
-                                 kernel="vectorized").collect())
-    tf = sorted((r.vec_id, r.cluster, r.centroid_dist) for r in
-                kmeans_transform(sub, cents_f, dim_f,
-                                 kernel="fold").collect())
-    assert tv == tf  # exact float equality, not approx
-
-
-def test_matmul_kernel_matches_vectorized(spark, emb):
-    """The large-k dgemm kernel must produce the same model, the same
-    assignments, and (because the winner's distance is recomputed in
-    fold order) bit-equal centroid_dist on the fixture - the expanded
-    form only risks divergence on argmin razor-ties, absent here."""
-    from etl_pipeline_mini_project_01_spark.operators.kmeans import (
-        kmeans_fit,
-        kmeans_transform,
-    )
-
-    cents_v, dim = kmeans_fit(emb, k=5, iters=2, kernel="vectorized")
-    cents_m, dim_m = kmeans_fit(emb, k=5, iters=2, kernel="matmul")
-    assert (dim, cents_v) == (dim_m, cents_m)
-
-    tv = sorted((r.vec_id, r.cluster, r.centroid_dist) for r in
-                kmeans_transform(emb, cents_v, dim,
-                                 kernel="vectorized").collect())
-    tm = sorted((r.vec_id, r.cluster, r.centroid_dist) for r in
-                kmeans_transform(emb, cents_m, dim,
-                                 kernel="matmul").collect())
-    assert tv == tm  # exact float equality, not approx
-
-
-def test_semdedup_matmul_kernel_same_verdicts(spark, emb):
-    """semdedup(kernel='matmul') - dgemm assignment + the unchanged
-    fold-order pair stage - must emit identical verdicts to the
-    default."""
-    from etl_pipeline_mini_project_01_spark.operators.semdedup import (
-        semdedup,
-    )
-
-    base = sorted((r.vec_id, r.cluster, r.kept) for r in
-                  semdedup(emb, k=4, iters=2, threshold=0.35).collect())
-    fast = sorted((r.vec_id, r.cluster, r.kept) for r in
-                  semdedup(emb, k=4, iters=2, threshold=0.35,
-                           kernel="matmul").collect())
-    assert base == fast
+    rows = [(r.vec_id, list(r.embedding))
+            for r in emb.select("vec_id", "embedding").collect()]
+    want_cents, want = _lloyd_replay(rows, k=5, iters=2)
+    assert (dim, cents) == (len(want_cents[0]), want_cents)
+    assert got == want  # exact float equality, not approx
 
 
 def test_seeding_handles_sparse_noncontiguous_ids(spark, emb):
@@ -197,26 +197,11 @@ def test_twolevel_covers_all_rows_with_consistent_leaves(spark, emb):
     assert sum(next(iter(s)) for s in sizes.values()) == len(rows)
 
 
-def test_twolevel_matmul_kernel_matches_default(spark, emb):
-    from etl_pipeline_mini_project_01_spark.operators.kmeans import (
-        kmeans_assign_twolevel,
-    )
-
-    base = sorted((r.vec_id, r.coarse, r.fine) for r in
-                  kmeans_assign_twolevel(emb, k1=3, k2=2).collect())
-    fast = sorted((r.vec_id, r.coarse, r.fine) for r in
-                  kmeans_assign_twolevel(emb, k1=3, k2=2,
-                                         kernel="matmul").collect())
-    assert base == fast
-
-
 def test_topn_matches_pure_python_replay(spark, emb):
     """The distributed probe-list kernel (kmeans_transform_topn) must
     reproduce the exact (dist, cid)-ordered top-n the retired driver
     loop computed: floor-scaled xd, fold-order accumulation from 0.0,
     ties -> lowest cid (VERDICT r4 'done' criterion for the IVF fix)."""
-    import math
-
     from etl_pipeline_mini_project_01_spark.operators.kmeans import (
         kmeans_fit,
         kmeans_transform_topn,
@@ -231,14 +216,7 @@ def test_topn_matches_pure_python_replay(spark, emb):
     for r in sub.select("vec_id", "embedding").collect():
         xd = [math.floor(float(v) * (1 << 20)) / (1 << 20)
               for v in r.embedding]
-        ds = []
-        for cid, c in enumerate(cents):
-            acc = 0.0
-            for i in range(dim):
-                d = xd[i] - c[i]
-                acc = acc + d * d
-            ds.append((acc, cid))
-        ds.sort()
+        ds = sorted((_fold_sq(xd, c), cid) for cid, c in enumerate(cents))
         expect += [(int(r.vec_id), rank, cid)
                    for rank, (_, cid) in enumerate(ds[:3])]
     assert got == sorted(expect)
@@ -262,29 +240,11 @@ def test_topn_plan_is_map_side_only(spark, emb):
     assert "BatchEvalPython" not in plan
 
 
-def test_topn_matmul_kernel_matches_default(spark, emb):
-    got = None
-    from etl_pipeline_mini_project_01_spark.operators.kmeans import (
-        kmeans_fit,
-        kmeans_transform_topn,
-    )
-
-    cents, dim = kmeans_fit(emb, k=6, iters=1)
-    for kernel in ("vectorized", "matmul"):
-        out = sorted((r.vec_id, r.probe_rank, r.cluster) for r in
-                     kmeans_transform_topn(emb, cents, dim, n=6,
-                                           kernel=kernel).collect())
-        assert got is None or out == got
-        got = out
-
-
 def test_twolevel_transform_handles_empty_fine_cluster(spark, emb):
     """Frozen-model safety (ADVICE r4): applying a two-level model to
     data that routes into a coarse cluster with NO fine centroids must
     not crash - the row falls back to fine=0 with the distance measured
     against the coarse centroid itself."""
-    import math
-
     from etl_pipeline_mini_project_01_spark.operators.kmeans import (
         kmeans_fit_twolevel,
         kmeans_transform_twolevel,
@@ -306,11 +266,7 @@ def test_twolevel_transform_handles_empty_fine_cluster(spark, emb):
     vec = (emb.filter(F.col("vec_id") == probe.vec_id)
            .select("embedding").collect()[0].embedding)
     xd = [math.floor(float(v) * (1 << 20)) / (1 << 20) for v in vec]
-    acc = 0.0
-    for i in range(dim):
-        d = xd[i] - coarse[2][i]
-        acc = acc + d * d
-    assert probe.fine_dist == acc
+    assert probe.fine_dist == _fold_sq(xd, coarse[2])
 
 
 def test_twolevel_refines_coarse_inertia(spark, emb):

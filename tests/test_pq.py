@@ -570,10 +570,10 @@ def test_build_plan_has_no_corpus_join(spark, pq_model):
     emb, nemb, books, codes = pq_model
     cents, dim = kmeans_fit(nemb, k=8, iters=1)
     flat = _ivf_pq_routed(nemb, cents, dim, books, "vec_id",
-                          "embedding", None, 1)
+                          "embedding", 1)
     cc, fi, dim2 = kmeans_fit_twolevel(nemb, 3, 3, 1, 1)
     hier = _ivf_pq_routed_twolevel(nemb, cc, fi, 3, dim2, books,
-                                   "vec_id", "embedding", None, 1)
+                                   "vec_id", "embedding", 1)
     for routed in (flat, hier):
         plan = routed._jdf.queryExecution().sparkPlan().toString()
         assert "Join" not in plan, plan

@@ -29,9 +29,33 @@ def emb(spark):
     return load_table(spark, SF_DIR, "embeddings")
 
 
-def _python_model(spark, emb):
-    """Replay the rule in plain Python from the fitted assignment."""
-    cents, dim = kmeans_fit(emb, k=K, iters=ITERS)
+def _cos(a, b):
+    # Same arithmetic as the operator: per-component normalization
+    # (one IEEE division each), then a sequential dot fold.
+    na = math.sqrt(sum(x * x for x in a))
+    nb = math.sqrt(sum(y * y for y in b))
+    return sum((x / na) * (y / nb) for x, y in zip(a, b))
+
+
+def _rule_replay(by_cluster, tau):
+    """{vec_id: kept} from {cluster: [(vec_id, centroid_dist, vec)]}:
+    a member is dropped when a same-cluster neighbor with cosine >= tau
+    dominates it (farther from the centroid; ties -> lower id)."""
+    kept = {}
+    for members in by_cluster.values():
+        for vid, dist, vec in members:
+            dominated = any(
+                _cos(vec, ovec) >= tau
+                and (odist > dist or (odist == dist and ovid < vid))
+                for ovid, odist, ovec in members if ovid != vid)
+            kept[vid] = not dominated
+    return kept
+
+
+def _python_model(spark, emb, k=K, iters=ITERS, tau=TAU):
+    """Replay the rule in plain Python from the fitted assignment:
+    ({vec_id: kept}, {vec_id: cluster})."""
+    cents, dim = kmeans_fit(emb, k=k, iters=iters)
     rows = (kmeans_transform(emb, cents, dim)
             .join(emb.select("vec_id", "embedding"), "vec_id")
             .collect())
@@ -39,29 +63,14 @@ def _python_model(spark, emb):
     for r in rows:
         by_cluster[r.cluster].append(
             (r.vec_id, r.centroid_dist, [float(v) for v in r.embedding]))
-
-    def cos(a, b):
-        # Same arithmetic as the operator: per-component normalization
-        # (one IEEE division each), then a sequential dot fold.
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(y * y for y in b))
-        return sum((x / na) * (y / nb) for x, y in zip(a, b))
-
-    kept = {}
-    for members in by_cluster.values():
-        for vid, dist, vec in members:
-            dominated = any(
-                cos(vec, ovec) >= TAU
-                and (odist > dist or (odist == dist and ovid < vid))
-                for ovid, odist, ovec in members if ovid != vid)
-            kept[vid] = not dominated
-    return kept
+    return (_rule_replay(by_cluster, tau),
+            {r.vec_id: r.cluster for r in rows})
 
 
 def test_matches_python_model(spark, emb):
     got = {r.vec_id: r.kept
            for r in semdedup(emb, k=K, iters=ITERS, threshold=TAU).collect()}
-    want = _python_model(spark, emb)
+    want, _ = _python_model(spark, emb)
     assert got == want
     assert not all(got.values()), "fixture's planted near-dups must prune"
     assert any(got.values())
@@ -77,36 +86,20 @@ def test_partition_count_invariant(spark, emb):
     assert outs[0] == outs[1]
 
 
-def test_pair_dot_kernels_bit_identical(spark, emb):
-    """Vectorized (numpy) and fold (HOF) pair-dot kernels of the JOIN
-    strategy must emit the SAME verdict relation - the dot accumulates
-    in the same order, so even threshold-adjacent pairs cannot flip
-    between kernels."""
-    base = sorted(
-        (r.vec_id, r.cluster, r.kept)
-        for r in semdedup(emb, k=K, iters=ITERS, threshold=TAU,
-                          kernel="vectorized", strategy="join").collect())
-    fold = sorted(
-        (r.vec_id, r.cluster, r.kept)
-        for r in semdedup(emb, k=K, iters=ITERS, threshold=TAU,
-                          kernel="fold", strategy="join").collect())
-    assert base == fold
-
-
 def test_strategies_bit_identical(spark, emb):
-    """The grouped (applyInPandas, pair-relation-free) and join
-    strategies must agree verdict-for-verdict: same normalization and
-    per-dim accumulation order, so cosines - and therefore threshold
-    and dominance outcomes - are bit-equal."""
-    grouped = sorted(
-        (r.vec_id, r.cluster, r.kept)
-        for r in semdedup(emb, k=K, iters=ITERS, threshold=TAU,
-                          strategy="grouped").collect())
-    join = sorted(
-        (r.vec_id, r.cluster, r.kept)
-        for r in semdedup(emb, k=K, iters=ITERS, threshold=TAU,
-                          strategy="join").collect())
-    assert grouped == join
+    """At the registered row's operating point (k=8, iters=2,
+    tau=0.35) the grouped verdict kernel must reproduce the dominance
+    rule replayed in Python from the engine's own assignment, verdict
+    AND cluster for every row: fold-order norms and dots
+    (operators/foldmath.py) make every cosine - and therefore every
+    threshold and dominance outcome - bit-equal to the replay's."""
+    k, iters, tau = 8, 2, 0.35
+    got = {r.vec_id: (r.cluster, r.kept)
+           for r in semdedup(emb, k=k, iters=iters,
+                             threshold=tau).collect()}
+    kept, cluster = _python_model(spark, emb, k, iters, tau)
+    assert got == {vid: (cluster[vid], kept[vid]) for vid in kept}
+    assert not all(kept.values())
 
 
 def test_grouped_strategy_blockwise_matches_single_block(spark, emb):
@@ -168,20 +161,7 @@ def test_twolevel_semdedup_matches_rule_replay(spark, emb):
     for r in rows:
         by_leaf[r.coarse * k2 + r.fine].append(
             (r.vec_id, r.fine_dist, [float(v) for v in r.embedding]))
-
-    def cos(a, b):
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(y * y for y in b))
-        return sum((x / na) * (y / nb) for x, y in zip(a, b))
-
-    expect = {}
-    for members in by_leaf.values():
-        for vid, dist, vec in members:
-            dominated = any(
-                cos(vec, ovec) >= TAU
-                and (odist > dist or (odist == dist and ovid < vid))
-                for ovid, odist, ovec in members if ovid != vid)
-            expect[vid] = not dominated
+    expect = _rule_replay(by_leaf, TAU)
 
     got = {r.vec_id: r.kept
            for r in semdedup_twolevel(emb, k1=k1, k2=k2,

@@ -53,7 +53,7 @@ def test_equals_batch_over_keepers_plus_delta(spark, split):
     s_asg = kmeans_transform(standing, cents, dim)
     s_verd = _semdedup_grouped(
         s_asg.join(standing.select("vec_id", "embedding"), "vec_id"),
-        TAU, "vec_id", "embedding", dim)
+        TAU, "vec_id", "embedding")
     keeper_ids = {r.vec_id for r in s_verd.filter("kept").collect()}
     keepers = (s_asg.filter(F.col("vec_id").isin(list(keeper_ids)))
                .join(standing.select("vec_id", "embedding"), "vec_id"))
@@ -62,7 +62,7 @@ def test_equals_batch_over_keepers_plus_delta(spark, split):
     cols = ["vec_id", "cluster", "centroid_dist", "embedding"]
     batch = _semdedup_grouped(
         keepers.select(*cols).unionByName(d_asg.select(*cols)),
-        TAU, "vec_id", "embedding", dim)
+        TAU, "vec_id", "embedding")
     want = sorted((r.vec_id, r.cluster, r.vec_id % 5 == 0, r.kept)
                   for r in batch.collect())
     assert got == want
@@ -103,7 +103,7 @@ def test_standing_state_passthrough(spark, split):
     s_asg = kmeans_transform(standing, cents, dim)
     s_verd = _semdedup_grouped(
         s_asg.join(standing.select("vec_id", "embedding"), "vec_id"),
-        TAU, "vec_id", "embedding", dim)
+        TAU, "vec_id", "embedding")
     via_state = _collect(semdedup_incremental(
         standing, delta, k=K, iters=ITERS, threshold=TAU,
         standing_verdicts=s_verd))

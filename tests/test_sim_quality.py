@@ -104,10 +104,21 @@ def test_exact_topk_is_self_consistent(spark):
                    for i in range(len(rs) - 1))
 
 
+def _fold_dot(a, b):
+    """Pure-Python left fold of the float64 products from 0.0 - the
+    arithmetic the oracle's list_reduce and the Arrow kernels share."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
+
+
 def test_cosine_kernels_bit_identical(spark):
-    """The Arrow-batched cosine must agree bit-for-bit with the fold
-    spec (same widen/multiply/accumulate order), so oracle hashes are
-    kernel-independent."""
+    """The Arrow-batched cosine must agree bit-for-bit with a
+    pure-Python replay of the fold spec (same widen/multiply/accumulate
+    order, then dot / (sqrt * sqrt)), so oracle hashes match."""
+    import math
+
     from etl_pipeline_mini_project_01_spark.plans.similarity import (
         _cosine,
     )
@@ -117,29 +128,36 @@ def test_cosine_kernels_bit_identical(spark):
         emb.filter(F.col("vec_id") < 3)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")))
     pairs = q.join(emb.limit(200), F.col("qid") != F.col("vec_id"))
-    vec = sorted(
-        (r.qid, r.vec_id, r.c) for r in pairs.select(
-            "qid", "vec_id",
-            _cosine(F.col("qv"), F.col("embedding"),
-                    kernel="vectorized").alias("c")).collect())
-    fold = sorted(
-        (r.qid, r.vec_id, r.c) for r in pairs.select(
-            "qid", "vec_id",
-            _cosine(F.col("qv"), F.col("embedding"),
-                    kernel="fold").alias("c")).collect())
-    assert vec == fold  # exact float equality
+    rows = pairs.select(
+        "qid", "vec_id", "qv", "embedding",
+        _cosine(F.col("qv"), F.col("embedding")).alias("c")).collect()
+    assert rows
+    for r in rows:
+        want = (_fold_dot(r.qv, r.embedding)
+                / (math.sqrt(_fold_dot(r.qv, r.qv))
+                   * math.sqrt(_fold_dot(r.embedding, r.embedding))))
+        assert r.c == want, (r.qid, r.vec_id)  # exact float equality
 
 
 def test_signature_kernels_bit_identical(spark):
+    """Every signature bit must equal a pure-Python replay: bit k of
+    sig_t is set iff the fold-order dot with hyperplane (t, k) is
+    >= 0."""
+    from etl_pipeline_mini_project_01_spark.plans.similarity import (
+        _hyperplane_coeff,
+    )
+
+    k_bits, n_tables = 3, 4
     emb = load_table(spark, SF_DIR, "embeddings").limit(150)
-    cols = ["vec_id"] + [f"sig_{t}" for t in range(4)]
-    vec = sorted(tuple(r[c] for c in cols) for r in
-                 multitable_signatures(emb, 3, 4,
-                                       kernel="vectorized").collect())
-    fold = sorted(tuple(r[c] for c in cols) for r in
-                  multitable_signatures(emb, 3, 4,
-                                        kernel="fold").collect())
-    assert vec == fold
+    planes = [[_hyperplane_coeff(t, k, 64) for k in range(k_bits)]
+              for t in range(n_tables)]
+    rows = multitable_signatures(emb, k_bits, n_tables).collect()
+    assert rows
+    for r in rows:
+        want = [sum(1 << k for k in range(k_bits)
+                    if _fold_dot(r.embedding, planes[t][k]) >= 0)
+                for t in range(n_tables)]
+        assert [r[f"sig_{t}"] for t in range(n_tables)] == want, r.vec_id
 
 
 def test_ivf_recall_monotone_in_nprobe_and_exact_at_full_probe(spark):

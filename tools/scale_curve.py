@@ -61,16 +61,6 @@ from etl_pipeline_mini_project_01_spark.session import get_spark
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: Assignment kernel for the k-means/SemDeDup points. Default 'matmul':
-#: the curve measures the PRODUCTION operating point, and at the
-#: cluster-size-constant rule k grows with the corpus - the 100x run
-#: with the bit-exact 'vectorized' kernel measured 402 s of SemDeDup's
-#: 446 s inside assignment alone (k*dim interpreter-dispatched numpy
-#: ops per batch), i.e. it measured kernel dispatch overhead, not the
-#: operator's scaling shape. Set SPARK_GRAFT_CURVE_KERNEL=vectorized to
-#: reproduce that run.
-KERNEL = os.environ.get("SPARK_GRAFT_CURVE_KERNEL", "matmul")
-
 #: Hierarchical-quantizer fit depth for the ivf stage (VERDICT r7 #3):
 #: the r7 curve ran 1 coarse + 1 fine iteration and the resulting
 #: fine-list imbalance made the 300x hier probe wall 15.3 s vs the
@@ -155,7 +145,7 @@ def run_flagships(spark, sf_dir: str, k_clusters: int,
     checks: dict[str, bool] = {}
     metrics: dict[str, float] = {}
 
-    km = kmeans_assign(emb, k=8, iters=2, kernel=KERNEL)
+    km = kmeans_assign(emb, k=8, iters=2)
     t0 = time.perf_counter()
     _consume(km)
     walls["kmeans_k8_i2"] = round(time.perf_counter() - t0, 3)
@@ -177,8 +167,7 @@ def run_flagships(spark, sf_dir: str, k_clusters: int,
             and 0 < r["kept"] <= n_emb)
         metrics[f"{label}_kept_frac"] = round(r["kept"] / n_emb, 4)
 
-    sd = semdedup(emb, k=k_clusters, iters=2, threshold=0.35,
-                  kernel=KERNEL)
+    sd = semdedup(emb, k=k_clusters, iters=2, threshold=0.35)
     t0 = time.perf_counter()
     _consume(sd)
     walls[f"semdedup_k{k_clusters}"] = round(time.perf_counter() - t0, 3)
@@ -188,7 +177,7 @@ def run_flagships(spark, sf_dir: str, k_clusters: int,
     # operating rule past k ~ 1e3 (SCALE.md flat-vs-two-level note).
     side = max(2, int(round(k_clusters ** 0.5)))
     sd2 = semdedup_twolevel(emb, k1=side, k2=side, iters1=2, iters2=2,
-                            threshold=0.35, kernel=KERNEL)
+                            threshold=0.35)
     t0 = time.perf_counter()
     _consume(sd2)
     walls[f"semdedup2_{side}x{side}"] = round(time.perf_counter() - t0, 3)
@@ -365,22 +354,20 @@ def run_incremental_semdedup(spark, sf_dir: str, k_clusters: int
     checks: dict[str, bool] = {}
 
     # untimed bootstrap: the persisted artifacts of the standing corpus
-    cents, dim = kmeans_fit(standing, k=k_clusters, iters=2,
-                            kernel=KERNEL)
-    s_asg = kmeans_transform(standing, cents, dim, kernel=KERNEL)
+    cents, dim = kmeans_fit(standing, k=k_clusters, iters=2)
+    s_asg = kmeans_transform(standing, cents, dim)
     s_verd = _semdedup_grouped(
         s_asg.join(standing.select("vec_id", "embedding"), "vec_id"),
-        0.35, "vec_id", "embedding", dim).localCheckpoint()
+        0.35, "vec_id", "embedding").localCheckpoint()
 
     inc = semdedup_incremental(standing, delta, threshold=0.35,
-                               kernel=KERNEL, standing_verdicts=s_verd,
+                               standing_verdicts=s_verd,
                                model=(cents, dim))
     t0 = time.perf_counter()
     _consume(inc)
     walls["semdedup_incr_stage"] = round(time.perf_counter() - t0, 3)
 
-    full = semdedup(emb, k=k_clusters, iters=2, threshold=0.35,
-                    kernel=KERNEL)
+    full = semdedup(emb, k=k_clusters, iters=2, threshold=0.35)
     t0 = time.perf_counter()
     _consume(full)
     walls["semdedup_full_rerun"] = round(time.perf_counter() - t0, 3)
@@ -393,13 +380,13 @@ def run_incremental_semdedup(spark, sf_dir: str, k_clusters: int
                .join(s_asg, "vec_id")
                .join(standing.select("vec_id", "embedding"), "vec_id")
                .withColumn("is_delta", F.lit(False)))
-    d_pool = (kmeans_transform(delta, cents, dim, kernel=KERNEL)
+    d_pool = (kmeans_transform(delta, cents, dim)
               .join(delta.select("vec_id", "embedding"), "vec_id")
               .withColumn("is_delta", F.lit(True)))
     cols = ["vec_id", "cluster", "centroid_dist", "embedding", "is_delta"]
     batch = _semdedup_grouped(
         keepers.select(*cols).unionByName(d_pool.select(*cols)),
-        0.35, "vec_id", "embedding", dim)
+        0.35, "vec_id", "embedding")
     disagree = (inc_ck.select("vec_id", "cluster", "kept")
                 .join(batch.select("vec_id", "cluster",
                                    F.col("kept").alias("bkept")),
@@ -466,10 +453,10 @@ def run_ivf_layout(spark, sf_dir: str, k_lists: int,
                .orderBy("vec_id").limit(IVF_N_QUERIES).localCheckpoint())
 
     t0 = time.perf_counter()
-    cents, dim = kmeans_fit(emb, k=k_lists, iters=1, kernel=KERNEL)
+    cents, dim = kmeans_fit(emb, k=k_lists, iters=1)
     path = os.path.join(REPO, ".scratch",
                         f"ivf_layout_{os.path.basename(sf_dir)}_{k_lists}")
-    write_ivf_layout(emb, cents, dim, path, kernel=KERNEL)
+    write_ivf_layout(emb, cents, dim, path)
     metrics["ivf_index_build_sec"] = round(time.perf_counter() - t0, 3)
 
     # r7: the hierarchical build - same leaf count (k1*k2 ~ k_lists),
@@ -489,16 +476,13 @@ def run_ivf_layout(spark, sf_dir: str, k_lists: int,
     hpath = path + "_hier"
     t0 = time.perf_counter()
     cc, fi, hdim = kmeans_fit_twolevel(emb, k12, k12,
-                                       HIER_ITERS1, HIER_ITERS2,
-                                       kernel=KERNEL)
-    write_ivf_layout_twolevel(emb, cc, fi, k12, hdim, hpath,
-                              kernel=KERNEL)
+                                       HIER_ITERS1, HIER_ITERS2)
+    write_ivf_layout_twolevel(emb, cc, fi, k12, hdim, hpath)
     metrics["ivf_hier_build_sec"] = round(time.perf_counter() - t0, 3)
 
     hier = ivf_probe_pruned_batch_twolevel(
         spark, hpath, queries, cc, fi, k12, hdim,
-        nprobe=IVF_NPROBE, k=IVF_TOP_K, nprobe_coarse=IVF_NPROBE,
-        kernel=KERNEL)
+        nprobe=IVF_NPROBE, k=IVF_TOP_K, nprobe_coarse=IVF_NPROBE)
     t0 = time.perf_counter()
     _consume(hier)
     walls["ivf_probe_hier"] = round(time.perf_counter() - t0, 3)
@@ -533,8 +517,7 @@ def run_ivf_layout(spark, sf_dir: str, k_lists: int,
     metrics["ivf_hier_probed_rows"] = int(sum(probed_sz))
 
     pruned = ivf_probe_pruned_batch(spark, path, queries, cents, dim,
-                                    nprobe=IVF_NPROBE, k=IVF_TOP_K,
-                                    kernel=KERNEL)
+                                    nprobe=IVF_NPROBE, k=IVF_TOP_K)
     t0 = time.perf_counter()
     _consume(pruned)
     walls["ivf_probe_layout"] = round(time.perf_counter() - t0, 3)
@@ -549,7 +532,7 @@ def run_ivf_layout(spark, sf_dir: str, k_lists: int,
     fullscan = (normalized_vectors(emb, "vec_id", "embedding")
                 .crossJoin(F.broadcast(qv))
                 .filter(F.col("vec_id") != F.col("query_id"))
-                .withColumn("cosine", pair_dot("qnv", "nv", KERNEL))
+                .withColumn("cosine", pair_dot("qnv", "nv"))
                 .withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= IVF_TOP_K)
                 .select("query_id", "vec_id", "cosine", "rank"))
@@ -606,8 +589,7 @@ def run_ivf_layout(spark, sf_dir: str, k_lists: int,
     for npc in (IVF_NPROBE, IVF_NPROBE + 2, IVF_NPROBE + 4):
         hn = ivf_probe_pruned_batch_twolevel(
             spark, hpath, queries, cc, fi, k12, hdim,
-            nprobe=IVF_NPROBE, k=IVF_TOP_K, nprobe_coarse=npc,
-            kernel=KERNEL)
+            nprobe=IVF_NPROBE, k=IVF_TOP_K, nprobe_coarse=npc)
         n_q: dict[int, set[int]] = {}
         for r in hn.collect():
             n_q.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -622,10 +604,9 @@ def run_ivf_layout(spark, sf_dir: str, k_lists: int,
         metrics[f"ivf_hier_probed_rows_npc{npc}"] = int(probed_rows)
 
     if check_equality:
-        cand = (kmeans_transform_topn(queries, cents, dim, n=IVF_NPROBE,
-                                      kernel=KERNEL)
+        cand = (kmeans_transform_topn(queries, cents, dim, n=IVF_NPROBE)
                 .select(F.col("vec_id").alias("query_id"), "cluster"))
-        mem = (kmeans_transform(emb, cents, dim, kernel=KERNEL)
+        mem = (kmeans_transform(emb, cents, dim)
                .select("vec_id", "cluster")
                .join(emb.select("vec_id", "embedding"), "vec_id")
                .join(F.broadcast(cand), "cluster")
@@ -637,7 +618,7 @@ def run_ivf_layout(spark, sf_dir: str, k_lists: int,
                    "embedding",
                    lambda x: x.cast("double") / F.sqrt("_n2")))
                .join(F.broadcast(qv), "query_id")
-               .withColumn("cosine", pair_dot("qnv", "nv", KERNEL))
+               .withColumn("cosine", pair_dot("qnv", "nv"))
                .withColumn("rank", F.row_number().over(
                    Window.partitionBy("query_id")
                    .orderBy(F.desc("cosine"), "vec_id")))
@@ -820,7 +801,7 @@ def run_pq(spark, sf_dir: str, k_lists: int = 8
     exact = (normalized_vectors(vecs, "vec_id", "embedding")
              .crossJoin(F.broadcast(qv))
              .filter(F.col("vec_id") != F.col("query_id"))
-             .withColumn("cosine", pair_dot("qnv", "nv", KERNEL))
+             .withColumn("cosine", pair_dot("qnv", "nv"))
              .withColumn("rank", F.row_number().over(w))
              .filter(F.col("rank") <= IVF_TOP_K)
              .select("query_id", "vec_id"))
@@ -870,10 +851,9 @@ def run_pq(spark, sf_dir: str, k_lists: int = 8
         REPO, ".scratch", f"ivfpq_{os.path.basename(sf_dir)}_{k_lists}")
     t0 = time.perf_counter()
     cc2, fi2, dim = kmeans_fit_twolevel(nemb, k12, k12,
-                                        HIER_ITERS1, HIER_ITERS2,
-                                        kernel=KERNEL)
+                                        HIER_ITERS1, HIER_ITERS2)
     write_ivf_pq_layout_twolevel(nemb, cc2, fi2, k12, dim, books,
-                                 ivfpq_path, kernel=KERNEL)
+                                 ivfpq_path)
     metrics["ivfpq_index_build_sec"] = round(time.perf_counter() - t0, 3)
 
     # rerank depth 20*k (vs the unpruned race's 10*k): the ADC order
@@ -965,15 +945,15 @@ def run_daily_ingest(spark, sf_dir: str, k_clusters: int
     d_docs = docs.filter("doc_id % 5 = 0")
 
     # ---- untimed bootstrap: yesterday's persisted artifacts ----
-    cents, dim = kmeans_fit(s_emb, k=k_clusters, iters=2, kernel=KERNEL)
+    cents, dim = kmeans_fit(s_emb, k=k_clusters, iters=2)
     path = os.path.join(REPO, ".scratch",
                         f"ingest_layout_{os.path.basename(sf_dir)}")
     shutil.rmtree(path, ignore_errors=True)
-    write_ivf_layout(s_emb, cents, dim, path, kernel=KERNEL)
-    s_asg = kmeans_transform(s_emb, cents, dim, kernel=KERNEL)
+    write_ivf_layout(s_emb, cents, dim, path)
+    s_asg = kmeans_transform(s_emb, cents, dim)
     s_verd = _semdedup_grouped(
         s_asg.join(s_emb.select("vec_id", "embedding"), "vec_id"),
-        0.35, "vec_id", "embedding", dim).localCheckpoint()
+        0.35, "vec_id", "embedding").localCheckpoint()
     s_buckets = lsh_buckets(s_docs, hash_fn="xxhash64").localCheckpoint()
     n_standing, n_delta = s_emb.count(), d_emb.count()
     queries = (d_emb.select("vec_id", "embedding")
@@ -981,18 +961,18 @@ def run_daily_ingest(spark, sf_dir: str, k_clusters: int
 
     # ---- timed: one incoming batch through the composed stage ----
     t0 = time.perf_counter()
-    append_to_ivf_layout(d_emb, cents, dim, path, kernel=KERNEL)
+    append_to_ivf_layout(d_emb, cents, dim, path)
     walls["ingest_append"] = round(time.perf_counter() - t0, 3)
 
     probe = ivf_probe_pruned_batch(spark, path, queries, cents, dim,
                                    nprobe=IVF_NPROBE, k=IVF_TOP_K,
-                                   kernel=KERNEL, probe_lists="plan")
+                                   probe_lists="plan")
     t0 = time.perf_counter()
     _consume(probe)
     walls["ingest_probe"] = round(time.perf_counter() - t0, 3)
 
     inc = semdedup_incremental(s_emb, d_emb, threshold=0.35,
-                               kernel=KERNEL, standing_verdicts=s_verd,
+                               standing_verdicts=s_verd,
                                model=(cents, dim))
     t0 = time.perf_counter()
     _consume(inc)
@@ -1050,8 +1030,7 @@ def run_daily_ingest(spark, sf_dir: str, k_clusters: int
                        .select("vec_id",
                                F.col("cluster").cast("bigint")
                                .alias("lc"))
-                       .join(kmeans_transform(d_emb, cents, dim,
-                                              kernel=KERNEL)
+                       .join(kmeans_transform(d_emb, cents, dim)
                              .select("vec_id", "cluster"), "vec_id",
                              "full")
                        .filter((F.col("lc") != F.col("cluster"))
@@ -1070,8 +1049,7 @@ def run_daily_ingest(spark, sf_dir: str, k_clusters: int
                .first()[0]])],
         "vec_id bigint, embedding array<float>")
     top = ivf_probe_pruned_batch(spark, path, probe_q, cents, dim,
-                                 nprobe=IVF_NPROBE, k=1,
-                                 kernel=KERNEL).collect()
+                                 nprobe=IVF_NPROBE, k=1).collect()
     checks["ingest_probe_sees_delta"] = bool(
         top and top[0]["vec_id"] == 0)
 
@@ -1081,13 +1059,13 @@ def run_daily_ingest(spark, sf_dir: str, k_clusters: int
                .join(s_asg, "vec_id")
                .join(s_emb.select("vec_id", "embedding"), "vec_id")
                .withColumn("is_delta", F.lit(False)))
-    d_pool = (kmeans_transform(d_emb, cents, dim, kernel=KERNEL)
+    d_pool = (kmeans_transform(d_emb, cents, dim)
               .join(d_emb.select("vec_id", "embedding"), "vec_id")
               .withColumn("is_delta", F.lit(True)))
     cols = ["vec_id", "cluster", "centroid_dist", "embedding", "is_delta"]
     batch = _semdedup_grouped(
         keepers.select(*cols).unionByName(d_pool.select(*cols)),
-        0.35, "vec_id", "embedding", dim)
+        0.35, "vec_id", "embedding")
     sem_disagree = (inc_ck.select("vec_id", "cluster", "kept")
                     .join(batch.select("vec_id", "cluster",
                                        F.col("kept").alias("bkept")),
@@ -1163,15 +1141,14 @@ def run_compaction(spark, sf_dir: str, k_clusters: int,
     emb = load_table(spark, sf_dir, "embeddings")
     mod = n_appends + 1
     base_emb = emb.filter(f"vec_id % {mod} = 0")
-    cents, dim = kmeans_fit(base_emb, k=k_clusters, iters=1,
-                            kernel=KERNEL)
+    cents, dim = kmeans_fit(base_emb, k=k_clusters, iters=1)
     path = os.path.join(REPO, ".scratch",
                         f"compact_layout_{os.path.basename(sf_dir)}")
     shutil.rmtree(path, ignore_errors=True)
-    write_ivf_layout(base_emb, cents, dim, path, kernel=KERNEL)
+    write_ivf_layout(base_emb, cents, dim, path)
     for r in range(1, mod):
         append_to_ivf_layout(emb.filter(f"vec_id % {mod} = {r}"),
-                             cents, dim, path, kernel=KERNEL)
+                             cents, dim, path)
 
     mf = manifest_clusters(path)
     metrics["compact_files_before"] = sum(len(fs) for fs in mf.values())
@@ -1182,7 +1159,7 @@ def run_compaction(spark, sf_dir: str, k_clusters: int,
     def _probe():
         return ivf_probe_pruned_batch(
             spark, path, queries, cents, dim, nprobe=IVF_NPROBE,
-            k=IVF_TOP_K, kernel=KERNEL, probe_lists="literal")
+            k=IVF_TOP_K, probe_lists="literal")
 
     _consume(_probe())                       # warm-up
     t0 = time.perf_counter()
@@ -1414,11 +1391,6 @@ def main() -> None:
         "scale_factor": n,
         # Which stage subset ran: checks_pass covers ONLY these series.
         "stages": sorted(stages),
-        # Per-unit ratios are comparable ONLY within a same-kernel
-        # series (ADVICE r4: matmul and vectorized points must not be
-        # mixed when reading round-over-round trends) - consumers key
-        # series by this field.
-        "kernel": KERNEL,
         "base_dir": BASE_SF,
         "big_dir": big_dir,
         "kmeans": _pair("kmeans_k8_i2", "kmeans_k8_i2"),
