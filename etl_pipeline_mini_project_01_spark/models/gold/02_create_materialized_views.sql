@@ -1,7 +1,9 @@
 -- Gold analytical tables (reference gold/02_create_materialized_views.sql
 -- declares 7 matviews; here they are external parquet tables refreshed by
--- recompute + atomic swap, sources/resilience.refresh_views). Explicit
--- output schemas - DDL is the contract, data arrives later.
+-- recompute + atomic swap, sources/resilience.refresh_views). Each layer's
+-- tables are written concurrently, with a barrier between layers: all 7
+-- views refresh side by side once silver is in place. Explicit output
+-- schemas - DDL is the contract, data arrives later.
 CREATE TABLE IF NOT EXISTS gold.g1_daily_engagement_summary (
     full_date DATE,
     year INT,

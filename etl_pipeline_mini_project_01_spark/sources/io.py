@@ -45,13 +45,14 @@ def atomic_overwrite(df: DataFrame, path: str,
     as SCALE.md documents) - scheme-qualified / multi-reader
     tables belong on sources/versioned.py, whose snapshot+manifest
     protocol runs on any filesystem via sources/fsio.py.
+    Concurrent calls are safe on distinct paths, not on the same path:
+    they would share its `.__staging__` and `.__old__` directories.
     """
     staging = path.rstrip("/") + ".__staging__"
     backup = path.rstrip("/") + ".__old__"
     write_table(df, staging, "overwrite", partition_by)
-    for p in (backup,):
-        if os.path.exists(p):
-            shutil.rmtree(p)
+    if os.path.exists(backup):
+        shutil.rmtree(backup)
     if os.path.exists(path):
         os.rename(path, backup)
     os.rename(staging, path)

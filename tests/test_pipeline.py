@@ -6,7 +6,14 @@ import os
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_mini_project_01_spark.pipeline import run_pipeline
+from etl_pipeline_mini_project_01_spark.pipeline import (
+    GOLD_VIEWS,
+    build_bronze,
+    build_silver,
+    run_pipeline,
+)
+from etl_pipeline_mini_project_01_spark.plans import registry
+from etl_pipeline_mini_project_01_spark.session import harden
 from etl_pipeline_mini_project_01_spark.sources.io import (
     atomic_overwrite,
     write_csv_fallback,
@@ -25,6 +32,27 @@ def test_full_pipeline(spark, tmp_path):
         assert stats[f"gold_{view}_rows"] > 0
     # bronze partitioned by nothing here; gold tables re-readable
     assert spark.read.parquet(f"{out}/gold/g4_hashtag_performance").count() > 0
+    # Each table's concurrent read-back counted that table, not a sibling.
+    tables = {"silver": ("dim_date", "dim_account", "fact"),
+              "gold": GOLD_VIEWS}
+    for layer, names in tables.items():
+        for name in names:
+            assert stats[f"{layer}_{name}_rows"] == \
+                spark.read.parquet(f"{out}/{layer}/{name}").count(), name
+
+
+def test_layer_builders_leave_session_conf_unchanged(spark):
+    """Silver's and gold's frames are built side by side on driver
+    threads, so a builder that set a session conf would race its
+    siblings. `load_table` hardens the session on every build; apply it
+    first so the snapshot holds the values the builders see."""
+    registry.load_all_plans()
+    harden(spark)
+    before = dict(spark.conf.getAll)
+    silver = build_silver(spark, SF_DIR, build_bronze(spark, SF_DIR, "run_c"))
+    gold = {v: registry.QUERIES[v](spark, SF_DIR) for v in GOLD_VIEWS}
+    assert len(silver) == 3 and len(gold) == 7
+    assert dict(spark.conf.getAll) == before
 
 
 def test_atomic_overwrite_swaps(spark, tmp_path):

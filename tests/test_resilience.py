@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+
 import pytest
 
 from etl_pipeline_mini_project_01_spark.sources.resilience import (
@@ -43,18 +47,81 @@ def test_schema_to_ddl(spark):
 
 def test_refresh_views_tolerates_partial_failure(spark):
     written = {}
+    # Only the two good views reach their writer: the bad one raises in
+    # its builder, and must not leave the others waiting on it.
+    barrier = threading.Barrier(2, timeout=30)
 
     def boom():
         raise RuntimeError("bad view")
+
+    def writer(name, df):
+        barrier.wait()
+        written[name] = df.count()
 
     report = refresh_views(
         spark,
         {"good": lambda: spark.range(3), "bad": boom,
          "also_good": lambda: spark.range(1)},
-        writer=lambda name, df: written.__setitem__(name, df.count()))
+        writer=writer)
     assert report["good"]["ok"] and report["also_good"]["ok"]
     assert not report["bad"]["ok"] and "bad view" in report["bad"]["error"]
     assert written == {"good": 3, "also_good": 1}
+
+
+def test_refresh_views_runs_writers_concurrently(spark):
+    """Every writer waits for all the others: a serial refresh breaks the
+    barrier (its views report ok=False) instead of hanging. More views
+    than cores and a short switch interval stress the shared report."""
+    names = [f"v{i}" for i in (7, 3, 5, 0, 6, 1, 4, 2)]
+    barrier = threading.Barrier(len(names), timeout=30)
+    written = {}
+
+    def writer(name, df):
+        barrier.wait()
+        if name == names[0]:
+            time.sleep(0.2)  # finishes last, reported first
+        written[name] = df.count()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        report = refresh_views(
+            spark, {n: (lambda n=n: spark.range(int(n[1:]))) for n in names},
+            writer)
+    finally:
+        sys.setswitchinterval(interval)
+    assert list(report) == names
+    assert all(status["ok"] for status in report.values()), report
+    assert written == {n: int(n[1:]) for n in names}
+
+
+def test_refresh_views_empty():
+    assert refresh_views(None, {}, lambda name, df: None) == {}
+
+
+def test_refresh_views_inherits_job_group(spark):
+    """Writers run on pool threads with the caller's local properties, so
+    every job they submit carries the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty  # store catches up
+    drain()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("refresh-test", "job-group inheritance")
+    try:
+        report = refresh_views(
+            spark, {f"v{i}": (lambda i=i: spark.range(i + 1))
+                    for i in range(3)},
+            writer=lambda name, df: df.collect())
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert all(status["ok"] for status in report.values()), report
+    drain()
+    grouped = set(tracker.getJobIdsForGroup("refresh-test"))
+    assert len(grouped) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
 def test_sentiment_backend_factory(spark):
