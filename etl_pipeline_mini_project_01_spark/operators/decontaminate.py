@@ -21,11 +21,8 @@ plans/dedup.py:156-162.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..functions.text import word_array
 
@@ -33,13 +30,14 @@ from ..functions.text import word_array
 #: range. Tunable per call.
 DEFAULT_N = 13
 
-#: Bloom prefilter sizing: m bits / k hashes; fill = 1-exp(-n*k/m) for
-#: n distinct grams, FP ~ fill^k. The default 2^22 bits (512 KiB
-#: packed broadcast) suits benchmarks up to ~3e5 distinct grams (~25%
-#: fill -> FP ~0.4%); for a 1e6-gram suite use 2^25 (4 MiB, ~11% fill,
-#: FP ~1.6e-4) - the standard rule m ~ 10*n keeps FP near 1%.
+#: Bloom prefilter size in bits. The JVM filter derives its hash count
+#: from `expected_items` and `bits` (k = round(bits/expected_items *
+#: ln2), Spark's BloomFilter.create rule; 7 at the default
+#: expected_items = bits/10), so FP ~ (1-exp(-k*n/bits))^k for n
+#: distinct benchmark grams: ~0.8% at n = bits/10, i.e. ~4e5 grams for
+#: the default 2^22 bits (a 512 KiB serialized filter). Size `bits` ~10x
+#: the benchmark's distinct grams - a 1e6-gram suite wants 2^24.
 BLOOM_BITS = 1 << 22
-BLOOM_K = 4
 
 
 def _ngram_hashes(df: DataFrame, n: int, id_col: str,
@@ -57,60 +55,12 @@ def _ngram_hashes(df: DataFrame, n: int, id_col: str,
         .distinct())
 
 
-def _gram_hash_pairs(df: DataFrame, n: int, id_col: str,
-                     text_col: str) -> DataFrame:
-    """(id_col, gram_hash, h2): distinct double-hash pairs of each word
-    n-gram - gram_hash is the UNSEEDED xxhash64 (the exact-join key the
-    rest of the pipeline already consumes), h2 a seeded sibling. The
-    r15 arrow-probe shape (VERDICT r14 #6): both hashes project
-    MAP-SIDE from the gram text, so the gram-distinct exchange carries
-    16-byte pairs instead of ~100-byte n-gram strings (~10x fewer
-    exchange bytes at n=13, guide SS2.2/SS2.3); every Bloom position
-    derives from the pair via Kirsch-Mitzenmacher double hashing
-    (_bloom_mask), so the gram string never needs to survive a
-    shuffle. Dedup collisions need BOTH 64-bit hashes to collide -
-    strictly rarer than the single-hash collision the exact path
-    already documents, and the oracle string-counts the registered
-    rows, so a collision would surface as a driver mismatch."""
-    toks = df.select(id_col, word_array(text_col).alias("_w"))
-    idx = F.when(F.size("_w") >= n,
-                 F.sequence(F.lit(1), F.size("_w") - (n - 1))
-                 ).otherwise(F.array().cast("array<int>"))
-    return (toks.select(
-        id_col,
-        F.explode(F.transform(
-            idx, lambda i: F.array_join(F.slice("_w", i, n), " ")
-        )).alias("gram"))
-        .select(id_col,
-                F.xxhash64("gram").alias("gram_hash"),
-                F.xxhash64(F.lit(1), "gram").alias("h2"))
-        .distinct())
-
-
-def _bloom_mask(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray,
-                bits: int, k: int) -> np.ndarray:
-    """All-k-positions-set mask over an unpacked bool bitmap, positions
-    by double hashing: pos_i = (h1 + i*h2) mod bits in uint64
-    wrap-around arithmetic (Kirsch & Mitzenmacher 2006: two hashes
-    simulate k with the same asymptotic FP rate). The ONE position
-    function both the build (bloom_bitmap) and the probe evaluate -
-    identical inputs (the int64 xxhash64 pair reinterpreted as uint64)
-    on both sides, so no false negative is possible by construction."""
-    u1 = h1.astype(np.int64).view(np.uint64)
-    u2 = h2.astype(np.int64).view(np.uint64)
-    out = np.ones(u1.shape[0], dtype=bool)
-    for i in range(k):
-        pos = ((u1 + np.uint64(i) * u2) % np.uint64(bits)).astype(np.int64)
-        out &= bm[pos]
-    return out
-
-
 def _jvm_expr_tools(spark):
     """(ExpressionUtils, jvm) for building catalyst expressions that
     have no public PySpark binding. Version-pinned internals (Spark
-    4.x classic): used ONLY by the probe='jvm' bloom path below, and
-    failures surface as a clear RuntimeError naming the supported
-    fallback."""
+    4.x classic), used by the Bloom build and probe below; a Spark
+    build that does not expose them fails here with a clear
+    RuntimeError instead of an opaque py4j error mid-plan."""
     try:
         jvm = spark._jvm
         # resolve the class eagerly so a missing internal fails HERE
@@ -119,11 +69,13 @@ def _jvm_expr_tools(spark):
         jvm.java.lang.Class.forName(
             "org.apache.spark.sql.classic.ExpressionUtils")
         return jvm.org.apache.spark.sql.classic.ExpressionUtils, jvm
-    except Exception as exc:  # pragma: no cover - version-drift gate
+    except Exception as exc:
         raise RuntimeError(
-            "probe='jvm' needs Spark's internal BloomFilter expressions "
+            "the Bloom decontamination probe needs Spark's internal "
+            "BloomFilter expressions "
             "(org.apache.spark.sql.classic.ExpressionUtils); this Spark "
-            f"build does not expose them ({exc!r}). Use probe='arrow'."
+            f"build does not expose them ({exc!r}). contamination_scores "
+            "computes the same counts with public APIs only."
         ) from exc
 
 
@@ -138,12 +90,12 @@ def bloom_filter_jvm(benchmark: DataFrame, n: int = DEFAULT_N,
     and the one collect is the `bits`/8-byte filter itself
     (control-plane sized). The function is registry-internal in Spark
     (not callable from SQL), so the expression is constructed through
-    the catalyst API directly (VERDICT r6 #3 - the recorded JVM
-    attempt). Returns None for a benchmark with zero n-grams (the
-    aggregate's null - callers treat it as nothing-matches).
+    the catalyst API directly. Returns None for a benchmark with zero
+    n-grams (the aggregate's null - callers treat it as
+    nothing-matches).
 
     `expected_items` sizes the optimal hash count k = m/n * ln2;
-    default bits/10 mirrors the m ~ 10n rule the Arrow path documents."""
+    default bits/10 is the m ~ 10n rule (see BLOOM_BITS)."""
     from pyspark.sql.classic.column import Column as CColumn
 
     spark = benchmark.sparkSession
@@ -181,57 +133,33 @@ def jvm_might_contain(spark, bf: bytes, value_col):
     return CColumn(eu.column(mc))
 
 
-def bloom_bitmap(benchmark: DataFrame, n: int = DEFAULT_N,
-                 text_col: str = "text", bits: int = BLOOM_BITS,
-                 k: int = BLOOM_K) -> np.ndarray:
-    """Packed (np.packbits) Bloom bitmap of the benchmark's n-grams,
-    built distributed and collected as DISTINCT double-hash pairs
-    (|grams| x 16 bytes - MB-scale for any benchmark-sized input; the
-    corpus side never collects anything). Positions derive driver-side
-    through the SAME _bloom_mask double-hash arithmetic the probe
-    kernel evaluates (r15) - one position function, zero false
-    negatives by construction, and the benchmark gram strings stop
-    surviving their distinct exchange too."""
-    bench = benchmark.select(
-        F.monotonically_increasing_id().alias("_bid"), F.col(text_col))
-    pairs = (_gram_hash_pairs(bench, n, "_bid", text_col)
-             .select("gram_hash", "h2").distinct().collect())
-    bm = np.zeros(bits, dtype=bool)
-    if pairs:
-        h1 = np.fromiter((r["gram_hash"] for r in pairs), dtype=np.int64)
-        h2 = np.fromiter((r["h2"] for r in pairs), dtype=np.int64)
-        u1 = h1.view(np.uint64)
-        u2 = h2.view(np.uint64)
-        for i in range(k):
-            bm[((u1 + np.uint64(i) * u2)
-                % np.uint64(bits)).astype(np.int64)] = True
-    return np.packbits(bm)
-
-
 def bloom_contamination_scores(docs: DataFrame, benchmark: DataFrame,
                                n: int = DEFAULT_N, id_col: str = "doc_id",
                                text_col: str = "text",
                                bits: int = BLOOM_BITS,
-                               k: int = BLOOM_K,
                                audit: bool = True,
-                               bitmap: np.ndarray | bytes | None = None,
-                               cache_handles: list | None = None,
-                               probe: str = "arrow") -> DataFrame:
+                               bitmap: bytes | None = None,
+                               cache_handles: list | None = None
+                               ) -> DataFrame:
     """Two-phase decontamination, the 100 TB shape: phase 1 probes every
-    corpus n-gram against a BROADCAST Bloom bitmap of the benchmark - an
-    Arrow-batched numpy gather evaluated during the scan - and phase 2
+    corpus n-gram against a Bloom filter of the benchmark, and phase 2
     runs the exact hash equi-join ONLY on the bloom-surviving grams
     (benchmark-FP-rate of the corpus, not the corpus). Phase 1 still
     pays the corpus-local gram DISTINCT and the per-doc groupBy (both
     shuffles exist identically in the one-phase exact path); what the
-    bitmap removes is the corpus-vs-benchmark JOIN shuffle for the
+    filter removes is the corpus-vs-benchmark JOIN shuffle for the
     ~99% clean gram majority, which at 100 TB is the dominant exchange.
-    MEASURED caveat (round-6 curve, SCALE.md): on local[32] the exact
-    JVM hash join beats this path at every scale up to 100x - even
-    forced to shuffle - because the probe's Arrow round-trip costs
-    more than a memory-speed shuffle saves; the bitmap's win condition
-    is a NETWORK-bound gram exchange. Size `bits` ~20x the benchmark's
-    distinct grams: the 512 KiB default saturates near ~700k grams.
+
+    The filter is built distributed by Spark's own BloomFilterAggregate
+    (bloom_filter_jvm) and probed by BloomFilterMightContain
+    (jvm_might_contain): a codegen-inlined JVM expression during the
+    scan, with no Python round trip per batch. MEASURED (r7 curve,
+    SCALE_CURVE.json decon_isolated): at 100x on local[32] the probe
+    ties the exact join (85.3 vs 86.7 s) - locally the join shuffle it
+    avoids is memory-speed, so the win condition is a network-bound
+    gram exchange. A Spark build without these internals raises
+    _jvm_expr_tools' RuntimeError; contamination_scores is the
+    public-API path.
 
     `audit=True` (the driver-row configuration) makes `bloom_no_miss` a
     REAL zero-false-negative check: per doc, the bloom-gated hit count
@@ -254,94 +182,28 @@ def bloom_contamination_scores(docs: DataFrame, benchmark: DataFrame,
     it; unpersist each handle once the output is materialized. Without
     the list, the cache lives until the session evicts it.
 
-    `bitmap` lets a caller reuse a persisted benchmark bitmap artifact
-    (the production shape: build once, decontaminate many corpora) -
-    and lets tests inject a deliberately corrupted one to prove the
-    audit reports FALSE on real gram loss. Its type follows `probe`:
-    packed numpy bits for "arrow", the serialized JVM filter bytes for
-    "jvm".
-
-    `probe` picks the phase-1 membership kernel (VERDICT r6 #3):
-      * "arrow" - the k-seeded-hash numpy bitmap gather in an
-        Arrow-batched pandas_udf (the original path; its round-trip is
-        what the r6 curve measured losing to the exact join locally);
-      * "jvm" - Spark's own BloomFilterMightContain against a filter
-        built distributed by BloomFilterAggregate (bloom_filter_jvm):
-        the probe is a codegen-inlined JVM expression during the scan,
-        zero Python/Arrow transfer - the variant that isolates whether
-        the Arrow hop or the bitmap idea itself was losing the race.
-        ANSWERED (r7 curve, SCALE_CURVE.json r7 decon_isolated): the
-        Arrow hop was the entire gap - at 100x the JVM probe ties the
-        exact join (85.3 vs 86.7 s) where the Arrow probe lost 2.2x
-        (184.8 s). Locally the race is a dead heat because the join
-        shuffle the bitmap avoids is memory-speed; the win condition
-        remains a network-bound gram exchange, now with a measured
-        ~zero-overhead probe kernel on this side of it.
-    Verdicts are IDENTICAL across probes (no false negatives either
-    way; FP-rate differences only change phase-2 work, never a count) -
-    pinned in tests/test_decontaminate.py.
+    `bitmap` lets a caller reuse serialized filter bytes from
+    bloom_filter_jvm (the production shape: build once, decontaminate
+    many corpora) - and lets tests inject a deliberately dead filter to
+    prove the audit reports FALSE on real gram loss.
 
     Output: (id_col, doc_ngrams, hit_ngrams, contamination,
     bloom_no_miss)."""
-    if probe not in ("arrow", "jvm"):
-        raise ValueError(f"probe must be 'arrow' or 'jvm', got {probe!r}")
-    spark = docs.sparkSession
-    if probe == "jvm" and bitmap is None:
-        # ADVICE r7: the jvm kernel rides version-pinned Spark internals
-        # (classic.ExpressionUtils + BloomFilterAggregate). If a Spark
-        # upgrade moves them, degrade to the public-API arrow kernel
-        # instead of erroring - counts are probe-invariant (zero false
-        # negatives both ways), only the probe's cost profile changes.
-        # Skipped when the caller handed us a prebuilt JVM bitmap: that
-        # bytes payload is not an arrow bitmap, and its existence proves
-        # the internals resolved moments ago anyway.
-        try:
-            _jvm_expr_tools(spark)
-        except RuntimeError:
-            probe = "arrow"
-    if probe == "jvm":
-        # The JVM probe and the audit join both consume ONLY
-        # xxhash64(gram) (the filter is built over those longs), so
-        # hash per gram map-side and DISTINCT on (id, hash) - an
-        # 8-byte key - instead of deduping the n-gram STRINGS (~100
-        # bytes each) and hashing afterwards (r14, guide SS2.2
-        # "shuffle narrower types"). Count parity with the
-        # string-distinct is the same xxhash64-collision argument the
-        # exact path (contamination_scores) already documents, and the
-        # oracle string-counts both rows, so a collision would surface
-        # as a driver mismatch. The arrow probe shuffles the 16-byte
-        # double-hash pair since r15 (see _gram_hash_pairs).
-        grams = _ngram_hashes(docs, n, id_col, text_col)
-        bf = bitmap if bitmap is not None else \
-            bloom_filter_jvm(benchmark, n, text_col, bits)
-        is_hit = (F.lit(False) if bf is None
-                  else jvm_might_contain(spark, bf, F.col("gram_hash")))
-        probed = grams.withColumn("_bloom", is_hit)
-    else:
-        # r15 (VERDICT r14 #6): the probe consumes the 16-byte
-        # double-hash pair - map-side hashed, hash-distinct - so no
-        # gram STRING ever crosses an exchange on this path either;
-        # the k positions derive in-kernel via _bloom_mask, the same
-        # arithmetic the bitmap build ran.
-        grams = _gram_hash_pairs(docs, n, id_col, text_col)
-        if bitmap is None:
-            bitmap = bloom_bitmap(benchmark, n, text_col, bits, k)
-        bc = spark.sparkContext.broadcast(bitmap)
-        memo: dict[int, np.ndarray] = {}
-
-        @pandas_udf("boolean")
-        def _bloom_all_set(h1: pd.Series, h2: pd.Series) -> pd.Series:
-            bm = memo.get(0)
-            if bm is None:
-                bm = memo[0] = np.unpackbits(bc.value).view(bool)
-            return pd.Series(_bloom_mask(
-                bm, h1.to_numpy(dtype=np.int64),
-                h2.to_numpy(dtype=np.int64), bits, k))
-
-        probed = (grams
-                  .withColumn("_bloom",
-                              _bloom_all_set("gram_hash", "h2"))
-                  .drop("h2"))
+    # The probe and the audit join both consume ONLY xxhash64(gram)
+    # (the filter is built over those longs), so grams are hashed
+    # map-side and DISTINCT on the 8-byte (id, hash) key, never on the
+    # ~100-byte n-gram strings (guide SS2.2 "shuffle narrower types").
+    # Count parity with a string-distinct is the xxhash64-collision
+    # argument contamination_scores documents, and the oracle
+    # string-counts the registered row, so a collision would surface as
+    # a driver mismatch.
+    grams = _ngram_hashes(docs, n, id_col, text_col)
+    bf = bitmap if bitmap is not None else \
+        bloom_filter_jvm(benchmark, n, text_col, bits)
+    is_hit = (F.lit(False) if bf is None
+              else jvm_might_contain(docs.sparkSession, bf,
+                                     F.col("gram_hash")))
+    probed = grams.withColumn("_bloom", is_hit)
     bench = (_ngram_hashes(
         benchmark.select(F.monotonically_increasing_id().alias("_bid"),
                          F.col(text_col)), n, "_bid", text_col)

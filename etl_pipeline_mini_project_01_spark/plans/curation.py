@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.text import word_array
+from ..session import scoped_conf
 from .dedup import _CANDIDATES_SQL, lsh_buckets, lsh_buckets_sql, lsh_candidates
 from .registry import register
 
@@ -120,22 +121,6 @@ def _cc_round_partitions(n_edges: int) -> int:
     return max(1, -(-n_edges * 24 // (128 << 20)))
 
 
-class _scoped_shuffle_partitions:
-    """try/finally conf scope: set spark.sql.shuffle.partitions for the
-    CC round loop, restore on exit (exception included)."""
-
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
-
-
 def connected_components(edges: DataFrame, max_rounds: int = 20,
                          algorithm: str = "star",
                          checkpoint_dir: str | None = None,
@@ -183,8 +168,8 @@ def connected_components(edges: DataFrame, max_rounds: int = 20,
              .localCheckpoint())
     labels = (edges.select(F.col("src").alias("doc_id")).distinct()
               .withColumn("label", F.col("doc_id")))
-    with _scoped_shuffle_partitions(
-            edges.sparkSession, _cc_round_partitions(int(obs0.get["n"]))):
+    with scoped_conf(edges.sparkSession, "spark.sql.shuffle.partitions",
+                     str(_cc_round_partitions(int(obs0.get["n"])))):
         for _ in range(max_rounds):
             prop = (edges.join(labels, edges.src == labels.doc_id)
                     .select(F.col("dst").alias("doc_id"), "label"))
@@ -253,8 +238,8 @@ def _cc_star(edges: DataFrame, max_rounds: int = 50,
     # edge count (r15, guide SS2.2) - the loop's per-round exchanges
     # carry (hi, lo) pairs bounded by 2|e|, and the count just rode the
     # checkpoint job for free. Scoped + restored, exception included.
-    with _scoped_shuffle_partitions(
-            edges.sparkSession, _cc_round_partitions(int(prev_sig["n"]))):
+    with scoped_conf(edges.sparkSession, "spark.sql.shuffle.partitions",
+                     str(_cc_round_partitions(int(prev_sig["n"])))):
         return _cc_star_rounds(e, nodes, prev_sig, max_rounds, _sig_aggs,
                                pin or (lambda df: df.localCheckpoint()))
 

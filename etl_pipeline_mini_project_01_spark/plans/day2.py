@@ -28,6 +28,7 @@ from pyspark.sql import functions as F  # noqa: F401  (plan-module idiom)
 
 from ..catalog import steps_frame
 from ..pipeline import incremental_bronze_append
+from ..session import scoped_conf
 from ..sources.io import compact_table, vacuum_orphans, write_table_clustered
 from .registry import register
 
@@ -479,16 +480,12 @@ def versioned_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint at first start, so the query stays consistent.)
     in_bytes = sum(os.path.getsize(os.path.join(in_dir, f))
                    for f in os.listdir(in_dir))
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(max(1, -(-in_bytes // (128 << 20)))))
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions",
+                     str(max(1, -(-in_bytes // (128 << 20))))):
         final = run_to_versioned_sink(agg, root,
                                       os.path.join(scratch, "ckpt"),
                                       keys=["user_id"],
                                       output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     final = final.localCheckpoint()           # pin: versions get vacuumed
 
     versions = list_versions(root)

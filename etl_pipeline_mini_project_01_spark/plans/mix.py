@@ -162,7 +162,7 @@ def decontamination_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase Bloom-prefilter decontamination
     (operators/decontaminate.py bloom_contamination_scores): corpus
-    grams probe a BROADCAST 512 KiB bitmap of the benchmark during the
+    grams probe a 512 KiB JVM Bloom filter of the benchmark during the
     scan. NOTE (ADVICE r5): this registered row - and the bench
     headline of the same name - runs the default audit=True mode, where
     the exact left-join covers ALL grams so `bloom_no_miss` is a REAL
@@ -172,20 +172,17 @@ def decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-vs-benchmark shuffle for the ~99% clean gram majority (the
     production shape; measured on the scale curve, not this row). The
     oracle is the one-phase exact computation - the hash match proves
-    the prefilter lost nothing - and a lossy bitmap fails twice: FALSE
+    the prefilter lost nothing - and a lossy filter fails twice: FALSE
     verdicts AND an oracle hash mismatch.
 
-    r7 (VERDICT r6 #3): the row runs probe='jvm' - phase 1 is Spark's
-    own BloomFilterAggregate/BloomFilterMightContain, a codegen-inlined
-    JVM membership test with zero Arrow transfer - so the driver
-    oracle-checks the new kernel; jvm==arrow row equality is separately
-    pinned in tests/test_decontaminate.py, and the exact-vs-bloom race
-    for BOTH probes is measured on the scale curve."""
+    Phase 1 is Spark's own BloomFilterAggregate/BloomFilterMightContain,
+    a codegen-inlined JVM membership test with zero Arrow transfer; the
+    exact-vs-bloom race is measured on the scale curve."""
     from ..operators.decontaminate import bloom_contamination_scores
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 37 == 0).select("text")
     return (
-        bloom_contamination_scores(docs, bench, n=_DECON_N, probe="jvm")
+        bloom_contamination_scores(docs, bench, n=_DECON_N)
         .select("doc_id",
                 F.col("doc_ngrams").cast("bigint").alias("doc_ngrams"),
                 F.col("hit_ngrams").cast("bigint").alias("hit_ngrams"),

@@ -13,6 +13,7 @@ assumes:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -90,3 +91,19 @@ def harden(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - conf locked down: best effort
             pass
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for a with-block; on exit (exception
+    included) restore the prior session value, or unset the key if the
+    session had none. The one seam for session-scoped Spark config."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

@@ -11,7 +11,6 @@ per micro-batch; at scale state lives in the per-partition state store
 from __future__ import annotations
 
 from collections.abc import Iterator
-from contextlib import contextmanager
 from typing import Any
 
 import pandas as pd
@@ -24,6 +23,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import scoped_conf
 from .windows import read_events_stream
 
 OUTPUT_SCHEMA = StructType([
@@ -75,7 +75,6 @@ def tws_available() -> bool:
         return False
 
 
-@contextmanager
 def tws_state_store_conf(spark: SparkSession):
     """Scope the RocksDB state-store provider (required by
     transformWithState) to a with-block: the prior providerClass is
@@ -85,19 +84,10 @@ def tws_state_store_conf(spark: SparkSession):
     silently switched the applyInPandasWithState fallback's store too).
     The conf is read at query START, so the block must span
     .start()/awaitTermination(), not just plan construction."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
+    return scoped_conf(
+        spark, "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider")
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
 
 
 def running_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:

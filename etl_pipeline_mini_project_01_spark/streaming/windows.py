@@ -18,7 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import harden
+from ..session import harden, scoped_conf
 
 
 def scaled_stream_partitions(sf_dir: str,
@@ -42,20 +42,15 @@ def scaled_stream_partitions(sf_dir: str,
     return max(1, -(-total // (128 << 20)))
 
 
-@contextlib.contextmanager
 def _shuffle_conf(spark: SparkSession, n: int | None):
     """Scoped spark.sql.shuffle.partitions override for one streaming
     run (restored after; Structured Streaming pins the count into the
-    checkpoint at first start, so the query stays consistent)."""
+    checkpoint at first start, so the query stays consistent). None
+    leaves the session conf alone."""
     if n is None:
-        yield
-        return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        return contextlib.nullcontext()
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))
+
 
 #: Streaming-source schema for events, parameterized on how `ts` is
 #: physically stored. The harness parquet has shipped it both as INT64

@@ -124,29 +124,6 @@ def test_bloom_two_phase_equals_one_phase_exact(spark):
     assert planted <= flagged
 
 
-def test_bloom_audit_catches_lossy_bitmap(spark):
-    """bloom_no_miss must be a REAL check (ADVICE r4): injecting a
-    corrupted bitmap (all bits cleared - every gram wrongly 'clean')
-    must flip the verdict to FALSE exactly for the docs whose exact hit
-    count is nonzero, instead of reporting TRUE by construction."""
-    import numpy as np
-
-    from etl_pipeline_mini_project_01_spark.operators.decontaminate import (
-        BLOOM_BITS,
-        bloom_contamination_scores,
-    )
-    docs, benchmark, _ = _fixture(spark)
-    exact = {r.doc_id: r.hit_ngrams
-             for r in contamination_scores(docs, benchmark, n=N).collect()}
-    dead = np.packbits(np.zeros(BLOOM_BITS, dtype=bool))
-    rows = bloom_contamination_scores(docs, benchmark, n=N,
-                                      bitmap=dead).collect()
-    assert any(h > 0 for h in exact.values())
-    for r in rows:
-        assert r.hit_ngrams == 0  # the dead bitmap dropped everything
-        assert r.bloom_no_miss == (exact[r.doc_id] == 0), r
-
-
 def test_bloom_audit_off_returns_null_verdict(spark):
     from etl_pipeline_mini_project_01_spark.operators.decontaminate import (
         bloom_contamination_scores,
@@ -168,60 +145,35 @@ def test_bloom_audit_off_returns_null_verdict(spark):
 
 def test_bloom_prefilter_actually_prunes(spark):
     """On a corpus where most grams are clean, the bloom stage must pass
-    only a small fraction into the exact join (FP rate ~ fill^k): probe
-    the gram relation directly and bound the survivor share."""
+    only a small fraction into the exact join: probe the gram relation
+    directly with the JVM filter and bound the survivor share."""
     from etl_pipeline_mini_project_01_spark.operators.decontaminate import (
-        BLOOM_BITS,
-        BLOOM_K,
-        _bloom_mask,
-        _gram_hash_pairs,
-        bloom_bitmap,
+        _ngram_hashes,
+        bloom_filter_jvm,
+        jvm_might_contain,
     )
-    import numpy as np
 
     docs, benchmark, _ = _fixture(spark)
-    bm = np.unpackbits(
-        bloom_bitmap(benchmark, n=N)).view(bool)
-    fill = bm.mean()
-    # probe through the r15 double-hash pair - the same derivation the
-    # kernel runs (_bloom_mask is the one position function)
-    pdf = _gram_hash_pairs(docs, N, "doc_id", "text").toPandas()
-    passed = _bloom_mask(bm, pdf["gram_hash"].to_numpy(dtype=np.int64),
-                         pdf["h2"].to_numpy(dtype=np.int64),
-                         BLOOM_BITS, BLOOM_K)
-    survivor_share = passed.mean()
-    # planted contamination is ~1/7 of docs; FPs add ~fill^k on top of
-    # the true-hit share - with the fixture's tiny benchmark, fill (and
-    # hence the FP tax) is well under 1%.
-    assert fill < 0.01
-    assert survivor_share < 0.5, (fill, survivor_share)
-
-
-def test_bloom_jvm_probe_equals_arrow_probe(spark):
-    """probe='jvm' (BloomFilterAggregate/BloomFilterMightContain - the
-    VERDICT r6 #3 pure-JVM path) must produce IDENTICAL rows to the
-    Arrow bitmap path in both audit modes: no false negatives either
-    way, and FP-rate differences between the two filters may only ever
-    change phase-2 work, never a reported count."""
-    from etl_pipeline_mini_project_01_spark.operators.decontaminate import (
-        bloom_contamination_scores,
-    )
-    docs, benchmark, planted = _fixture(spark)
-    for audit in (True, False):
-        arrow = sorted(map(tuple, bloom_contamination_scores(
-            docs, benchmark, n=N, audit=audit).collect()))
-        jvm = sorted(map(tuple, bloom_contamination_scores(
-            docs, benchmark, n=N, audit=audit, probe="jvm").collect()))
-        assert jvm == arrow, audit
-    flagged = {r[0] for r in jvm if r[2] > 0}
-    assert planted <= flagged
+    bf = bloom_filter_jvm(benchmark, n=N)
+    jvm = spark._jvm
+    fpp = jvm.org.apache.spark.util.sketch.BloomFilter.readFrom(
+        jvm.java.io.ByteArrayInputStream(bytearray(bf))).expectedFpp()
+    survivor_share = (_ngram_hashes(docs, N, "doc_id", "text")
+                      .select(F.avg(jvm_might_contain(
+                          spark, bf, F.col("gram_hash")).cast("double")))
+                      .first()[0])
+    # planted contamination is ~1/7 of docs; FPs add ~expectedFpp on top
+    # of the true-hit share - with the fixture's tiny benchmark the
+    # filter is nearly empty, so the FP tax is negligible.
+    assert fpp < 0.01
+    assert survivor_share < 0.5, (fpp, survivor_share)
 
 
 def test_bloom_jvm_audit_catches_lossy_filter(spark):
-    """The audit must stay a real check under probe='jvm': a dead
-    filter (structurally valid, zero bits set - every gram wrongly
-    'clean') must flip bloom_no_miss to FALSE exactly for docs with
-    nonzero exact hits."""
+    """bloom_no_miss must be a REAL check (ADVICE r4): a dead filter
+    (structurally valid, zero bits set - every gram wrongly 'clean')
+    must flip bloom_no_miss to FALSE exactly for docs with nonzero
+    exact hits, instead of reporting TRUE by construction."""
     from etl_pipeline_mini_project_01_spark.operators.decontaminate import (
         BLOOM_BITS,
         bloom_contamination_scores,
@@ -236,7 +188,7 @@ def test_bloom_jvm_audit_catches_lossy_filter(spark):
     empty.writeTo(baos)
     dead = bytes(baos.toByteArray())
     rows = bloom_contamination_scores(docs, benchmark, n=N,
-                                      bitmap=dead, probe="jvm").collect()
+                                      bitmap=dead).collect()
     assert any(h > 0 for h in exact.values())
     for r in rows:
         assert r.hit_ngrams == 0
@@ -244,8 +196,8 @@ def test_bloom_jvm_audit_catches_lossy_filter(spark):
 
 
 def test_bloom_jvm_filter_empty_benchmark(spark):
-    """Zero-gram benchmark: bloom_filter_jvm returns None and the jvm
-    probe treats it as nothing-matches (all docs clean, audit TRUE)."""
+    """Zero-gram benchmark: bloom_filter_jvm returns None and the probe
+    treats it as nothing-matches (all docs clean, audit TRUE)."""
     from etl_pipeline_mini_project_01_spark.operators.decontaminate import (
         bloom_contamination_scores,
         bloom_filter_jvm,
@@ -253,28 +205,41 @@ def test_bloom_jvm_filter_empty_benchmark(spark):
     docs, _, _ = _fixture(spark)
     empty = spark.createDataFrame([("tiny",)], "text string")  # < N words
     assert bloom_filter_jvm(empty, n=N) is None
-    rows = bloom_contamination_scores(docs, empty, n=N,
-                                      probe="jvm").collect()
+    rows = bloom_contamination_scores(docs, empty, n=N).collect()
     assert rows and all(r.hit_ngrams == 0 and r.bloom_no_miss
                         for r in rows)
 
 
-def test_bloom_jvm_degrades_to_arrow_on_internal_drift(spark, monkeypatch):
-    """ADVICE r7: the jvm probe rides version-pinned Spark internals
-    (classic.ExpressionUtils). When they stop resolving - a Spark minor
-    upgrade - probe='jvm' must degrade to the public-API arrow kernel
-    and return the SAME rows, instead of turning the graded plan row
-    into a RuntimeError."""
-    from etl_pipeline_mini_project_01_spark.operators import decontaminate
+def test_bloom_raises_clearly_on_internal_drift(spark, monkeypatch):
+    """The probe rides version-pinned Spark internals
+    (classic.ExpressionUtils). When the class stops resolving - a Spark
+    upgrade that moves it - the call must fail up front with the
+    RuntimeError that names it, not with an opaque py4j error mid-plan
+    and not by silently running some other kernel."""
+    from types import SimpleNamespace
 
-    docs, benchmark, planted = _fixture(spark)
-    want = sorted(map(tuple, decontaminate.bloom_contamination_scores(
-        docs, benchmark, n=N).collect()))
+    import pytest
 
-    def drifted(_spark):
-        raise RuntimeError("probe='jvm' needs Spark's internal ...")
+    from etl_pipeline_mini_project_01_spark.operators.decontaminate import (
+        bloom_contamination_scores,
+    )
 
-    monkeypatch.setattr(decontaminate, "_jvm_expr_tools", drifted)
-    got = sorted(map(tuple, decontaminate.bloom_contamination_scores(
-        docs, benchmark, n=N, probe="jvm").collect()))
-    assert got == want
+    docs, benchmark, _ = _fixture(spark)
+    session = docs.sparkSession
+    real = session._jvm
+
+    class DriftedJvm:
+        """The session's JVM view, with every class lookup missing."""
+        java = SimpleNamespace(lang=SimpleNamespace(Class=SimpleNamespace(
+            forName=lambda name: real.java.lang.Class.forName(
+                name + "Moved"))))
+
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+    monkeypatch.setattr(session, "_jvm", DriftedJvm())
+    with pytest.raises(RuntimeError, match="ExpressionUtils") as err:
+        bloom_contamination_scores(docs, benchmark, n=N)
+    cause = err.value.__cause__
+    assert (cause.java_exception.getClass().getName()
+            == "java.lang.ClassNotFoundException"), cause

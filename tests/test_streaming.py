@@ -28,6 +28,7 @@ def test_tws_conf_scope_sets_and_restores_provider(spark):
     """tws_state_store_conf must scope the RocksDB provider to the
     with-block and restore (or unset) the prior value - independent of
     protobuf availability, so this runs in every environment."""
+    from etl_pipeline_mini_project_01_spark.session import scoped_conf
     from etl_pipeline_mini_project_01_spark.streaming.stateful import (
         tws_state_store_conf,
     )
@@ -44,6 +45,18 @@ def test_tws_conf_scope_sets_and_restores_provider(spark):
     except RuntimeError:
         pass
     assert spark.conf.get(key, None) == prior
+    # The same seam scopes a conf the session already holds: the prior
+    # value comes back, exception included.
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    assert prior != "7"
+    try:
+        with scoped_conf(spark, key, "7"):
+            assert spark.conf.get(key) == "7"
+            raise RuntimeError("boom")
+    except RuntimeError:
+        pass
+    assert spark.conf.get(key) == prior
 
 
 def test_tws_running_totals_match_batch(spark):

@@ -293,35 +293,17 @@ def run_decontamination(spark, sf_dir: str
     _consume(bloom)
     walls["decon_bloom"] = round(time.perf_counter() - t0, 3)
 
-    # r7 (VERDICT r6 #3): the same survivor-only two-phase pipeline
-    # with the PURE-JVM probe - BloomFilterAggregate build +
-    # BloomFilterMightContain inlined into the scan, zero Arrow
-    # transfer - so the race isolates the Python round-trip from the
-    # bitmap idea itself.
-    jhandles: list = []
-    bloom_jvm = bloom_contamination_scores(docs, bench, n=3, audit=False,
-                                           cache_handles=jhandles,
-                                           probe="jvm")
-    t0 = time.perf_counter()
-    _consume(bloom_jvm)
-    walls["decon_bloom_jvm"] = round(time.perf_counter() - t0, 3)
-
-    def _equals_exact(two_phase) -> bool:
-        return (two_phase.select("doc_id",
-                                 F.col("doc_ngrams").alias("bg"),
-                                 F.col("hit_ngrams").alias("bh"))
-                .join(exact.select("doc_id",
-                                   F.col("doc_ngrams").alias("eg"),
-                                   F.col("hit_ngrams").alias("eh")),
-                      "doc_id", "full")
-                .filter((F.col("bg") != F.col("eg"))
-                        | (F.col("bh") != F.col("eh"))
-                        | F.col("bg").isNull() | F.col("eg").isNull())
-                .count()) == 0
-
-    checks["decon_two_phase_equals_one_phase"] = _equals_exact(bloom)
-    checks["decon_jvm_equals_one_phase"] = _equals_exact(bloom_jvm)
-    for h in handles + jhandles:
+    checks["decon_two_phase_equals_one_phase"] = (
+        bloom.select("doc_id", F.col("doc_ngrams").alias("bg"),
+                     F.col("hit_ngrams").alias("bh"))
+        .join(exact.select("doc_id", F.col("doc_ngrams").alias("eg"),
+                           F.col("hit_ngrams").alias("eh")),
+              "doc_id", "full")
+        .filter((F.col("bg") != F.col("eg"))
+                | (F.col("bh") != F.col("eh"))
+                | F.col("bg").isNull() | F.col("eg").isNull())
+        .count()) == 0
+    for h in handles:
         h.unpersist()
     return walls, checks
 
@@ -1404,7 +1386,6 @@ def main() -> None:
         "ann_topk": _pair("ann_topk", "ann_topk"),
         "decon_exact": _pair("decon_exact", "decon_exact"),
         "decon_bloom": _pair("decon_bloom", "decon_bloom"),
-        "decon_bloom_jvm": _pair("decon_bloom_jvm", "decon_bloom_jvm"),
         # r7 composed daily-ingest steady state (VERDICT r6 #5):
         # ingest_total is |delta|-dominated, so per_unit ~1 on a
         # proportional delta; the two *_full_rerun walls are the
