@@ -18,17 +18,15 @@ states the same invariants from the input alone:
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (plan-module idiom)
 
 from ..catalog import steps_frame
 from ..pipeline import incremental_bronze_append
-from ..session import scoped_conf
+from ..session import scoped_conf, scratch_dir
 from ..sources.io import compact_table, vacuum_orphans, write_table_clustered
 from .registry import register
 
@@ -54,15 +52,8 @@ ORDER BY s.step
 def day2_incremental_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercise the day-2 trio end-to-end (pipeline.py
     incremental_bronze_append; sources/io.py compact_table /
-    write_table_clustered) and emit their invariants. Scratch is keyed on
-    (input dir, per-process uuid) so concurrent runs never collide."""
-    if not hasattr(day2_incremental_counts, "_run_tag"):
-        day2_incremental_counts._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + day2_incremental_counts._run_tag)
-    from ..catalog import register_scratch
-
-    out = register_scratch(f"/tmp/spark_graft_day2_{tag}")
+    write_table_clustered) and emit their invariants."""
+    out = scratch_dir("day2", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
     table = os.path.join(out, "bronze", "events")
 
@@ -123,13 +114,7 @@ def day2_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL accounting) from the input alone."""
     from ..catalog import load_table
 
-    if not hasattr(day2_schema_evolution, "_run_tag"):
-        day2_schema_evolution._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + day2_schema_evolution._run_tag)
-    from ..catalog import register_scratch
-
-    out = register_scratch(f"/tmp/spark_graft_evolve_{tag}")
+    out = scratch_dir("evolve", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
 
     events = load_table(spark, sf_dir, "events")
@@ -186,12 +171,7 @@ def s9_ddl_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     the external LOCATIONs point at per-run scratch."""
     from ..sources.ddl import LAYERS, execute_ddl_scripts
 
-    if not hasattr(s9_ddl_catalog, "_run_tag"):
-        s9_ddl_catalog._run_tag = uuid.uuid4().hex[:8]
-    from ..catalog import register_scratch
-
-    out = register_scratch(
-        f"/tmp/spark_graft_s9_{s9_ddl_catalog._run_tag}")
+    out = scratch_dir("s9", sf_dir)
     execute_ddl_scripts(spark, {"OUT_DIR": out}, recreate=True)
 
     rows = []
@@ -269,9 +249,9 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition's files - asserted as a strict survivor subset whose
         every member lives under the o_orderstatus=F/ segment.
     The oracle states every value from the input alone via the same
-    cutoff predicate. Scratch keyed on (input dir, per-process uuid);
-    the reference analogue is re-running its loader against a mutated
-    source (/root/reference/src/loader/bronze_loader.py:143-188), which
+    cutoff predicate. The reference analogue is re-running its loader
+    against a mutated source
+    (/root/reference/src/loader/bronze_loader.py:143-188), which
     overwrites history - this layer is what makes 'the table as of the
     previous run' a readable artifact instead."""
     from ..catalog import load_table
@@ -284,14 +264,7 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    if not hasattr(versioned_time_travel, "_run_tag"):
-        versioned_time_travel._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + versioned_time_travel._run_tag)
-    from ..catalog import register_scratch
-
-    root = os.path.join(
-        register_scratch(f"/tmp/spark_graft_versioned_{tag}"), "orders")
+    root = os.path.join(scratch_dir("versioned", sf_dir), "orders")
     shutil.rmtree(os.path.dirname(root), ignore_errors=True)
 
     orders = load_table(spark, sf_dir, "orders")
@@ -421,13 +394,7 @@ def versioned_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.versioned_sink import run_to_versioned_sink
     from .parity import dsum
 
-    if not hasattr(versioned_stream_sink, "_run_tag"):
-        versioned_stream_sink._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + versioned_stream_sink._run_tag)
-    from ..catalog import register_scratch
-
-    scratch = register_scratch(f"/tmp/spark_graft_vsink_{tag}")
+    scratch = scratch_dir("vsink", sf_dir)
     shutil.rmtree(scratch, ignore_errors=True)
     in_dir = os.path.join(scratch, "in")
     os.makedirs(in_dir)
@@ -607,17 +574,13 @@ def txn_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     autocommitted writes (/root/reference/src/loader/*.py) - a reader
     between two of them sees a torn cross-table state; this layer is
     the atomic multi-table cut."""
-    from ..catalog import load_table, register_scratch
+    from ..catalog import load_table
     from ..sources.transactions import (commit_txn, latest_txn,
                                         read_txn_snapshot,
                                         unpinned_table_versions)
     from ..sources.versioned import write_version
 
-    if not hasattr(txn_multi_table, "_run_tag"):
-        txn_multi_table._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + txn_multi_table._run_tag)
-    root = register_scratch(f"/tmp/spark_graft_txn_{tag}")
+    root = scratch_dir("txn", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
 
@@ -735,14 +698,7 @@ def zorder_multi_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import fsio
     from ..sources.versioned import pruned_files, read_version
 
-    if not hasattr(zorder_multi_skip, "_run_tag"):
-        zorder_multi_skip._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + zorder_multi_skip._run_tag)
-    from ..catalog import register_scratch
-
-    root = os.path.join(
-        register_scratch(f"/tmp/spark_graft_zorder_{tag}"), "orders")
+    root = os.path.join(scratch_dir("zorder", sf_dir), "orders")
     shutil.rmtree(os.path.dirname(root), ignore_errors=True)
 
     orders = load_table(spark, sf_dir, "orders")

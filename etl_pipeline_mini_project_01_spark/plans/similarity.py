@@ -22,7 +22,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import uuid
+import os
 
 import numpy as np
 import pandas as pd
@@ -32,6 +32,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load_table, steps_frame
 from ..operators.foldmath import norm2, outer_dots, row_dots
+from ..session import scratch_dir
 from .registry import register
 
 N_QUERIES = 5
@@ -781,13 +782,6 @@ def ivf_kmeans_recall(spark: SparkSession, sf_dir: str,
 # the plan guards - this row makes the END-TO-END path oracle-checked)
 # ---------------------------------------------------------------------------
 
-_IVF_RUN_TAG = uuid.uuid4().hex[:8]
-# the shared stored-layout scratch root: removed at process exit, and
-# abandoned siblings from crashed runs are age-swept (catalog.register_scratch)
-from ..catalog import register_scratch as _register_scratch  # noqa: E402
-
-_register_scratch(f"/tmp/spark_graft_ivf_{_IVF_RUN_TAG}")
-
 
 def _ivf_layout_probe_oracle() -> str:
     """Full replay of the layout serving path: the flat k-means chain
@@ -856,7 +850,7 @@ def ann_ivf_layout_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, dim = kmeans_fit(emb, k=_KM_K, iters=_KM_ITERS)
-    path = f"/tmp/spark_graft_ivf_{_IVF_RUN_TAG}/embeddings_by_cluster"
+    path = os.path.join(scratch_dir("ivf", sf_dir), "embeddings_by_cluster")
     write_ivf_layout(emb, cents, dim, path)
     queries = (emb.filter(F.col("vec_id") < N_QUERIES)
                .select("vec_id", "embedding"))
@@ -1493,7 +1487,7 @@ def ann_ivf_hier_layout_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, k1=_KM2_K1, k2=_KM2_K2,
         iters1=_KM2_ITERS1, iters2=_KM2_ITERS2,
         return_assigned=True, carry=("embedding",))
-    path = f"/tmp/spark_graft_ivf_{_IVF_RUN_TAG}/embeddings_hier"
+    path = os.path.join(scratch_dir("ivf", sf_dir), "embeddings_hier")
     write_ivf_layout_twolevel(emb, cc, fi, _KM2_K2, dim, path,
                               coarse_assigned=assigned)
     queries = (emb.filter(F.col("vec_id") < N_QUERIES)
@@ -1812,7 +1806,7 @@ def ann_ivfpq_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             iters1=_KM2_ITERS1, iters2=_KM2_ITERS2,
             return_assigned=True, carry=("embedding",))
         books = books_fut.result()
-    path = f"/tmp/spark_graft_ivf_{_IVF_RUN_TAG}/embeddings_ivfpq"
+    path = os.path.join(scratch_dir("ivf", sf_dir), "embeddings_ivfpq")
     n = write_ivf_pq_layout_twolevel(emb, cc, fi, _KM2_K2, dim, books,
                                      path, coarse_assigned=assigned)
 
@@ -1897,8 +1891,6 @@ def ivf_generation_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/src/loader/bronze_loader.py) - an in-flight
     reader can observe the teardown; this layer is the
     snapshot-isolated index swap a 100 TB serving fleet needs."""
-    import hashlib
-    import os
     import shutil
 
     from ..operators.ivf_layout import (ivf_probe_pruned,
@@ -1907,13 +1899,7 @@ def ivf_generation_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
                                         write_ivf_layout_generation)
     from ..operators.kmeans import kmeans_fit
 
-    if not hasattr(ivf_generation_swap, "_run_tag"):
-        ivf_generation_swap._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + ivf_generation_swap._run_tag)
-    from ..catalog import register_scratch
-
-    root = register_scratch(f"/tmp/spark_graft_ivfgen_{tag}")
+    root = scratch_dir("ivfgen", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     path = os.path.join(root, "embeddings")
 

@@ -17,18 +17,13 @@ attempts, exponential 2-10 s backoff); S4 the CSV fallback sink at
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import scratch_dir
 from .registry import register
-
-#: Per-process scratch tag for the sink roundtrip rows (VERDICT r5 #7):
-#: module-level so repeated in-process runs reuse one scratch dir while
-#: concurrent processes (driver vs pytest) stay isolated.
-_RUN_TAG = uuid.uuid4().hex[:8]
 
 # ---------------------------------------------------------------------------
 # S2: retry/backoff wrapper as a driver row
@@ -112,11 +107,7 @@ def s4_csv_fallback_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-run scratch dir, catalog-free (same isolation as s9)."""
     from ..sources.io import write_csv_fallback
 
-    from ..catalog import register_scratch
-
-    out = os.path.join(
-        register_scratch(f"/tmp/spark_graft_s4_{_RUN_TAG}"),
-        "nation_by_region")
+    out = os.path.join(scratch_dir("s4", sf_dir), "nation_by_region")
 
     agg = (load_table(spark, sf_dir, "nation")
            .groupBy("n_regionkey")

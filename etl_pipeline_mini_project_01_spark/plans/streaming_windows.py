@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import scratch_dir
 from ..streaming.windows import (
     dedup_event_stream,
     run_to_completion,
@@ -106,22 +107,10 @@ def stream_file_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet sink + checkpoint, availableNow. Only windows the watermark
     closed (window_end <= max event time - 1h) are emitted - the oracle
     models exactly that append-mode contract."""
-    import hashlib
     import shutil
-    import uuid
 
-    # Scratch keyed on (input dir, per-process uuid): two concurrent runs
-    # over the same input never share (or delete) each other's in-flight
-    # sink/checkpoint. Cleared up-front so every call is a fresh run, and
-    # left in place after (the returned DataFrame reads the sink files
-    # lazily - no driver-side materialization).
-    if not hasattr(stream_file_sink_counts, "_run_tag"):
-        stream_file_sink_counts._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + stream_file_sink_counts._run_tag)
-    from ..catalog import register_scratch
-
-    scratch = register_scratch(f"/tmp/spark_graft_stream_sink_{tag}")
+    # Cleared up-front so every call is a fresh run.
+    scratch = scratch_dir("stream_sink", sf_dir)
     shutil.rmtree(scratch, ignore_errors=True)
     agg = tumbling_counts(spark, sf_dir, watermark="1 hour")
     out = run_to_file_sink(
@@ -238,17 +227,9 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count vs distinct-id count (any surviving duplicate splits
     them), the id sum, and the decimal-exact value sum - equal to the
     batch table's aggregate iff the emission is exactly-once."""
-    import hashlib
     import shutil
-    import uuid
 
-    if not hasattr(stream_dedup_events, "_run_tag"):
-        stream_dedup_events._run_tag = uuid.uuid4().hex[:8]
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-           + "_" + stream_dedup_events._run_tag)
-    from ..catalog import register_scratch
-
-    scratch = register_scratch(f"/tmp/spark_graft_stream_dedup_{tag}")
+    scratch = scratch_dir("stream_dedup", sf_dir)
     shutil.rmtree(scratch, ignore_errors=True)
     deduped = run_to_file_sink(
         dedup_event_stream(spark, sf_dir),

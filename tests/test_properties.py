@@ -150,33 +150,73 @@ def test_steps_frame_handles_parameterized_types(spark):
     assert df.dtypes[1][1] == "decimal(10,2)"
 
 
-def test_register_scratch_sweeps_aged_siblings(tmp_path, monkeypatch):
-    """register_scratch: aged spark_graft_* siblings (crashed runs)
-    are swept once per process; fresh siblings (possibly a live
-    concurrent process) survive; the registered path itself is
-    tracked for atexit removal."""
+def test_scratch_dir_one_root_sweeps_aged_siblings(tmp_path, monkeypatch):
+    """scratch_dir: the first call makes ONE per-process root under
+    tempfile.gettempdir() with one owner marker, and sweeps aged
+    spark_graft_* siblings (crashed runs, older builds' roots included)
+    once; fresh siblings (possibly a live concurrent process) survive.
+    Leaves are keyed on (name, input dir) under that one root."""
     import os
+    import tempfile
     import time
 
-    from etl_pipeline_mini_project_01_spark import catalog
+    from etl_pipeline_mini_project_01_spark import session
 
-    old = tmp_path / "spark_graft_dead"
+    old = tmp_path / "spark_graft_ivf_deadbeef"
     old.mkdir()
     os.utime(old, (time.time() - 10 * 3600, time.time() - 10 * 3600))
     fresh = tmp_path / "spark_graft_live"
     fresh.mkdir()
 
-    import glob as _glob
-    real_glob = _glob.glob
-    monkeypatch.setattr(_glob, "glob",
-                        lambda pat: real_glob(str(tmp_path / "spark_graft_*"))
-                        if pat == "/tmp/spark_graft_*" else real_glob(pat))
-    monkeypatch.setattr(catalog, "_SCRATCH_SWEPT", [])
-    mine = str(tmp_path / "spark_graft_mine")
-    assert catalog.register_scratch(mine) == mine
-    assert mine in catalog._SCRATCH_REGISTERED
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_SCRATCH_ROOT", None)
+    leaf = session.scratch_dir("day2", "/data/sf1")
+    root = os.path.dirname(leaf)
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.listdir(root) == [".owner_pid"]
     assert not old.exists()                  # aged: swept
     assert fresh.exists()                    # fresh: spared
+    assert session.scratch_dir("day2", "/data/sf1") == leaf
+    assert session.scratch_dir("day2", "/data/sf2") != leaf
+    assert os.path.dirname(session.scratch_dir("ivf", "/data/sf1")) == root
+
+
+def test_scratch_root_removed_at_process_exit(tmp_path):
+    """The per-process root (and every leaf under it) is gone once the
+    process that made it exits."""
+    import os
+    import subprocess
+    import sys
+
+    code = ("import os\n"
+            "from etl_pipeline_mini_project_01_spark import session\n"
+            "leaf = session.scratch_dir('x', '/d')\n"
+            "os.makedirs(leaf)\n"
+            "print(leaf)\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo,
+                         env={**os.environ, "TMPDIR": str(tmp_path)},
+                         capture_output=True, text=True, check=True)
+    leaf = out.stdout.strip()
+    assert os.path.dirname(os.path.dirname(leaf)) == str(tmp_path)
+    assert not os.path.exists(leaf)
+    assert not os.path.exists(os.path.dirname(leaf))
+
+
+def test_session_is_the_only_scratch_seam():
+    """No package file but session.py names a scratch root or keeps its
+    own run tag: every scratch path comes from session.scratch_dir."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / \
+        "etl_pipeline_mini_project_01_spark"
+    banned = (b"/tmp/spark_graft", b"register_scratch", b"_run_tag",
+              b"_RUN_TAG")
+    files = [p for p in sorted(pkg.rglob("*")) if p.is_file()
+             and p.name != "session.py" and "__pycache__" not in p.parts]
+    hits = [f"{path.relative_to(pkg)}: {word.decode()}"
+            for path in files for word in banned if word in path.read_bytes()]
+    assert not hits, hits
 
 
 def test_owner_alive_pid_reuse_eperm_and_legacy_markers(tmp_path):
@@ -190,7 +230,7 @@ def test_owner_alive_pid_reuse_eperm_and_legacy_markers(tmp_path):
     import os
     import subprocess
 
-    from etl_pipeline_mini_project_01_spark import catalog
+    from etl_pipeline_mini_project_01_spark import session
 
     def mk(name, content):
         d = tmp_path / name
@@ -199,22 +239,22 @@ def test_owner_alive_pid_reuse_eperm_and_legacy_markers(tmp_path):
         return str(d)
 
     me = os.getpid()
-    start = catalog._proc_start_ticks(me)
+    start = session._proc_start_ticks(me)
     assert start is not None                 # Linux container
-    assert catalog._owner_alive(
+    assert session._owner_alive(
         mk("live", json.dumps({"pid": me, "start": start})))
-    assert not catalog._owner_alive(
+    assert not session._owner_alive(
         mk("recycled", json.dumps({"pid": me, "start": start - 7})))
-    assert catalog._owner_alive(mk("legacy", str(me)))   # bare pid
+    assert session._owner_alive(mk("legacy", str(me)))   # bare pid
     # a genuinely dead pid: spawn-and-reap gives one that was just live
     proc = subprocess.Popen(["true"])
     proc.wait()
-    assert not catalog._owner_alive(
+    assert not session._owner_alive(
         mk("dead", json.dumps({"pid": proc.pid, "start": 1})))
     nomark = tmp_path / "bare"
     nomark.mkdir()
-    assert not catalog._owner_alive(str(nomark))
-    assert not catalog._owner_alive(mk("garbage", "not-a-pid"))
+    assert not session._owner_alive(str(nomark))
+    assert not session._owner_alive(mk("garbage", "not-a-pid"))
     # EPERM: kill raises PermissionError -> the process EXISTS -> alive
     real_kill = os.kill
 
@@ -223,7 +263,7 @@ def test_owner_alive_pid_reuse_eperm_and_legacy_markers(tmp_path):
 
     os.kill = eperm_kill
     try:
-        assert catalog._owner_alive(
+        assert session._owner_alive(
             mk("other_user", json.dumps({"pid": me, "start": start})))
     finally:
         os.kill = real_kill
