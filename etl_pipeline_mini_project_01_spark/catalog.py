@@ -9,14 +9,29 @@ below (notably `events.ts`, which testdata generations have shipped both
 as INT64 nanos and as native timestamp[us]; the nanos form is converted
 to microsecond timestamp - same truncation DuckDB applies when casting
 TIMESTAMP_NS to TIMESTAMP, keeping the oracle exact).
+
+The read schema comes from the parquet footer on the driver (pyarrow,
+~1 ms), not from Spark's inference: `spark.read.parquet` with no schema
+runs one inference job per call, while `spark.read.schema(s)` runs
+none. The footer schema is the physical one Spark would infer - tz-naive
+timestamps as timestamp_ntz, INT64 nanos as bigint - so the
+normalization and the canonical check below see the same frame either
+way. It is read on every call: no memo outlives a changed file.
 """
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from .session import harden
+from .sources.filestats import walk_parquet
 
 #: All tables the harness provides (one parquet each per scale-factor dir).
 TABLES: tuple[str, ...] = (
@@ -53,6 +68,25 @@ CANONICAL_SCHEMAS: dict[str, dict[str, str]] = {
 _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+def _footer_schema(path: str) -> StructType:
+    """The Spark schema of the driver-local parquet table at `path` (a
+    file, or a directory whose first visible data file speaks for it),
+    read from the footer: the schema `spark.read.parquet(path)` infers,
+    without its job. INT64 TIMESTAMP(NANOS) columns map to bigint, as
+    Spark reads them under the nanosAsLong conf `harden` sets; INT96
+    timestamps stay timestamps."""
+    if os.path.isdir(path):
+        path = walk_parquet(path)[0][1]
+    with pq.ParquetFile(path) as pf:
+        int64 = {c.path for c in pf.schema if c.physical_type == "INT64"}
+        arrow = pa.schema([
+            f.with_type(pa.int64())
+            if (f.name in int64 and pa.types.is_timestamp(f.type)
+                and f.type.unit == "ns") else f
+            for f in pf.schema_arrow])
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one harness table, normalized to its canonical schema.
 
@@ -62,7 +96,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     a named diff, not later as an opaque join/cast error or a silent
     oracle mismatch."""
     harden(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(_footer_schema(path)).parquet(path)
     for c in _NANO_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(c) == "bigint":
             # int64 nanos -> micros (integer div: truncation, matches DuckDB

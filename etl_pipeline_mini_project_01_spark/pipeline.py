@@ -13,6 +13,9 @@ Differences from the reference by design:
     refreshed and counted back concurrently from driver threads, with a
     barrier between layers: the reference's serial per-table steps are
     separate Spark actions, bound by per-job driver latency;
+  * the post-load checks read metadata, not data: row counts from the
+    stored files' parquet footers, the catalog summary from SHOW
+    statements, so no check submits a Spark job;
   * the per-layer DDL scripts (S9) run as step 0 via sources/ddl
     (spark.sql over models/<layer>/*.sql in lexical order, mirroring
     /root/reference/src/loader/model_executor.py:32-110), declaring the
@@ -38,7 +41,7 @@ from .functions.dates import calendar_attrs, date_key
 from .operators.scd import assign_surrogate_keys, scd2_initial
 from .plans import registry
 from .sources.ddl import execute_ddl_scripts
-from .sources.io import atomic_overwrite, catalog_summary
+from .sources.io import atomic_overwrite, catalog_summary, stored_rows
 from .sources.resilience import refresh_views, run_concurrently
 
 EVENT_DOMAIN = ("click", "view", "purchase", "signup", "error")
@@ -98,10 +101,13 @@ def build_silver(spark: SparkSession, sf_dir: str,
 def _publish(spark: SparkSession, out_dir: str, layer: str, name: str,
              df: DataFrame) -> int:
     """Atomic swap of one `layer.name` table, then the post-load check:
-    its row count read back from the stored table."""
-    atomic_overwrite(df, f"{out_dir}/{layer}/{name}")
+    its row count read back from the stored files' parquet footers (no
+    Spark job). REFRESH TABLE drops the catalog's cached file listing
+    for later readers; it runs no job either."""
+    path = f"{out_dir}/{layer}/{name}"
+    atomic_overwrite(df, path)
     spark.sql(f"REFRESH TABLE {layer}.{name}")
-    return spark.table(f"{layer}.{name}").count()
+    return stored_rows(path)
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
@@ -125,7 +131,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     # Partitions landed outside the catalog's view: recover them (the
     # at-scale equivalent of the reference's post-COPY ANALYZE).
     spark.sql("ALTER TABLE bronze.events RECOVER PARTITIONS")
-    stats["bronze_rows"] = spark.table("bronze.events").count()
+    stats["bronze_rows"] = stored_rows(f"{out_dir}/bronze/events")
     stats["bronze_sec"] = round(time.perf_counter() - t0, 2)
 
     t0 = time.perf_counter()
@@ -192,14 +198,15 @@ def incremental_bronze_append(spark: SparkSession, sf_dir: str,
     bronze = build_bronze(spark, sf_dir, run_id)
     if wm is not None:
         bronze = bronze.filter(F.col("ts") > F.lit(wm).cast("timestamp_ntz"))
-    # Control-plane scalar (the bookmark), not a data-path collect.
-    new_max = bronze.agg(F.max("ts").alias("m")).first()["m"]
+    # Control-plane scalars (the bookmark and the increment's size) in
+    # one job, not a data-path collect.
+    new_max, increment = bronze.agg(F.max("ts"), F.count(F.lit(1))).first()
     appended = 0
     if new_max is not None:
         batch_tag = hashlib.md5(f"{run_id}|{wm}".encode()).hexdigest()[:12]
         staging = os.path.join(bronze_root, f"_incoming_{batch_tag}")
         shutil.rmtree(staging, ignore_errors=True)
-        appended = bronze.count()
+        appended = increment
         bronze.write.mode("overwrite").partitionBy("date_key").parquet(staging)
         # Idempotent retry: purge any files a previous attempt of THIS
         # batch already moved in, then move the fresh staging files.

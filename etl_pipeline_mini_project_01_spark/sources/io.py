@@ -16,7 +16,10 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+from .filestats import walk_parquet
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite",
@@ -60,13 +63,24 @@ def atomic_overwrite(df: DataFrame, path: str,
         shutil.rmtree(backup)
 
 
+def stored_rows(path: str) -> int:
+    """Rows stored in the parquet table at `path`, summed from its data
+    files' footers: a read-back of what landed, with no Spark job. The
+    file set is `walk_parquet`'s, the one visibility rule the engine's
+    footer readers share."""
+    return sum(pq.read_metadata(p).num_rows for _, p in walk_parquet(path))
+
+
 def catalog_summary(spark: SparkSession) -> dict[str, int]:
     """S11: catalog introspection (model_executor.py:139-194 counts of
-    schemas/tables/matviews)."""
-    dbs = spark.catalog.listDatabases()
-    n_tables = 0
-    for db in dbs:
-        n_tables += len(spark.catalog.listTables(db.name))
+    schemas/tables/matviews). `SHOW DATABASES` / `SHOW TABLES IN db`
+    read names only, so no relation is resolved and no job runs; every
+    row counts, temporary views included (listed under each database,
+    as `spark.catalog.listTables` lists them)."""
+    dbs = [r[0] for r in spark.sql("SHOW DATABASES").collect()]
+    n_tables = sum(
+        len(spark.sql(f"SHOW TABLES IN `{db.replace('`', '``')}`").collect())
+        for db in dbs)
     return {"databases": len(dbs), "tables": n_tables}
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -37,6 +38,29 @@ def duck():
     con.close()
 
 
+@pytest.fixture
+def new_jobs(spark):
+    """`new_jobs(fn)` runs `fn()` under a fresh job group and returns the
+    number of Spark jobs it submitted, read from the status store once
+    the listener bus has drained. Worker threads that carry the caller's
+    local properties count too; jobs other threads submit meanwhile do
+    not."""
+    sc = spark.sparkContext
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+
+    def count(fn) -> int:
+        group = f"new-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        drain()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 # Canonicalization lives in driver_mimic.py (the standalone driver replica)

@@ -41,6 +41,24 @@ def test_full_pipeline(spark, tmp_path):
                 spark.read.parquet(f"{out}/{layer}/{name}").count(), name
 
 
+#: Spark jobs one `run_pipeline` pass submits at sf0.001: the data
+#: writes, the gold queries and RECOVER PARTITIONS. Schemas, read-back
+#: counts and the catalog summary come from footers and the catalog.
+MEDALLION_JOB_BUDGET = 40
+
+
+def test_pipeline_job_budget(spark, tmp_path, new_jobs):
+    stats = {}
+    jobs = new_jobs(lambda: stats.update(
+        run_pipeline(spark, SF_DIR, str(tmp_path / "warehouse"))))
+    assert jobs <= MEDALLION_JOB_BUDGET
+    assert set(stats) == {
+        "ddl_statements", "ddl_files", "bronze_rows", "bronze_sec",
+        "silver_dim_date_rows", "silver_dim_account_rows",
+        "silver_fact_rows", "silver_sec", "gold_sec", "databases", "tables",
+        *(f"gold_{view}_rows" for view in GOLD_VIEWS)}
+
+
 def test_layer_builders_leave_session_conf_unchanged(spark):
     """Silver's and gold's frames are built side by side on driver
     threads, so a builder that set a session conf would race its

@@ -17,7 +17,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from etl_pipeline_mini_project_01_spark.catalog import load_table
+from etl_pipeline_mini_project_01_spark.catalog import (
+    CANONICAL_SCHEMAS,
+    _footer_schema,
+    load_table,
+)
 from etl_pipeline_mini_project_01_spark.streaming.windows import (
     read_events_stream,
     run_to_completion,
@@ -40,6 +44,8 @@ def _write_events(dirname: str, ts_storage: str) -> str:
             [int(t.timestamp() * 1_000_000) * 1000 for t in cols[1]],
             type=pa.int64(),
         )
+    elif ts_storage == "timestamp_ns":  # INT64 TIMESTAMP(NANOS)
+        ts_arr = pa.array(cols[1], type=pa.timestamp("ns"))
     elif ts_storage == "timestamp_us":
         ts_arr = pa.array(cols[1], type=pa.timestamp("us"))
     else:
@@ -65,6 +71,20 @@ def test_batch_loader_normalizes_both_generations(spark, tmp_path, storage):
     assert dict(df.dtypes)["ts"].startswith("timestamp")
     got = [r.ts for r in df.orderBy("event_id").collect()]
     assert got == _EXPECTED_TS
+
+
+@pytest.mark.parametrize("storage",
+                         ["int64_nanos", "timestamp_ns", "timestamp_us"])
+def test_footer_schema_normalizes_to_canonical(spark, tmp_path, storage):
+    """The loader's footer schema is the one Spark infers for every
+    storage (nanos timestamps read as bigint), and normalization then
+    lands each on the canonical events schema."""
+    sf_dir = _write_events(str(tmp_path / storage), storage)
+    path = os.path.join(sf_dir, "events.parquet")
+    assert _footer_schema(path) == spark.read.parquet(path).schema
+    df = load_table(spark, sf_dir, "events")
+    assert dict(df.dtypes) == CANONICAL_SCHEMAS["events"]
+    assert [r.ts for r in df.orderBy("event_id").collect()] == _EXPECTED_TS
 
 
 @pytest.mark.parametrize("storage", ["int64_nanos", "timestamp_us"])
